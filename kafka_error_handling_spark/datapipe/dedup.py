@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..regime import forced_regime
 from ..sources.files import load_table
 
 __all__ = [
@@ -202,9 +203,6 @@ _SIG_BROADCAST_SLACK = 2  # row/struct overhead headroom over raw 64×8 B
 
 def _broadcast_signatures(spark: SparkSession, n_docs: int) -> bool:
     """True → the prefilter may broadcast the signature frame."""
-    mode = str(spark.conf.get(SIG_BROADCAST_CONF, "auto")).strip().lower()
-    if mode in ("true", "false"):
-        return mode == "true"
     from ..conf import driver_max_result_bytes
 
     budget = driver_max_result_bytes(spark)
@@ -547,10 +545,8 @@ def q_dedup_minhash_lsh(
     # VERDICT r8 #3).  The persisted sig now materializes lazily inside
     # the strong-pairs job, restoring the fused shape; a forced regime
     # (conf true/false) skips the probe entirely.
-    mode = str(spark.conf.get(SIG_BROADCAST_CONF, "auto")).strip().lower()
-    if mode in ("true", "false"):
-        bcast_sig = mode == "true"
-    else:
+    bcast_sig = forced_regime(spark, SIG_BROADCAST_CONF)
+    if bcast_sig is None:
         bcast_sig = _broadcast_signatures(spark, d.count())
     strong_df = spark.sql(strong_pairs_sql(sig_v, broadcast_signatures=bcast_sig))
     # persist + count + branch — NOT limit(CAP+1).collect(): a limit-probe

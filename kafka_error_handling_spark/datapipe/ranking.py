@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..regime import local_frame
 from ..sources.files import load_table
 
 __all__ = ["bm25_topk", "bm25_topk_multi", "vocab_df"]
@@ -833,9 +834,7 @@ def mmr_diversify(
     # double arithmetic, bit-identical in Python / Spark / DuckDB)
     pool_rows = pool.select("doc_id", "rrf").collect()
     if not pool_rows:
-        return spark.createDataFrame(
-            [], "doc_id long, mmr_rank int, mmr_score double"
-        )
+        return local_frame(spark, [], "doc_id long, mmr_rank int, mmr_score double")
     rrfs = [r["rrf"] for r in pool_rows]
     mn, mx = min(rrfs), max(rrfs)
     rel = {
@@ -846,9 +845,7 @@ def mmr_diversify(
     # vectors; job 3: the ≤pool² sim matrix off the checkpointed frame —
     # broadcast + explicit hint so the nobcast sweep never sees a
     # CartesianProduct, cosine rounded to 4 like every knn gate
-    ids = spark.createDataFrame(
-        [(i,) for i in sorted(rel)], "doc_id long"
-    )
+    ids = local_frame(spark, [(i,) for i in sorted(rel)], "doc_id long")
     pe = (
         emb.join(broadcast(ids), emb.vec_id == ids.doc_id)
         .select(F.col("doc_id"), F.col("embedding"))
@@ -891,7 +888,8 @@ def mmr_diversify(
         picks.append((best_doc, best_mmr))
         chosen.add(best_doc)
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (doc_id, i + 1, math.floor(score * 1000000) / 1000000.0)
             for i, (doc_id, score) in enumerate(picks)
@@ -1048,8 +1046,8 @@ def query_expansion_prf(
         .limit(m)
         .select("token", F.lit(_PRF_EXPAND_W).alias("w"))
     )
-    orig_terms = spark.createDataFrame(
-        [(t, 1.0) for t in query_terms], "token string, w double"
+    orig_terms = local_frame(
+        spark, [(t, 1.0) for t in query_terms], "token string, w double"
     )
     terms = orig_terms.unionByName(exp_terms).localCheckpoint(eager=True)
 
@@ -1224,7 +1222,8 @@ def _dense_ranks(
     from .similarity import _knn_scores_np
 
     vec_ids = sorted({vid for _t, vid in topics})
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [(qid, vid) for qid, (_t, vid) in enumerate(topics)],
         "qid int, vec_id long",
     )
@@ -1479,7 +1478,8 @@ def _wide_bm25_scores(
     toks = F.split(F.col(text_col), " ")
 
     # the query set as DATA: one broadcast row per (qid, term slot)
-    tterms = spark.createDataFrame(
+    tterms = local_frame(
+        spark,
         [
             (qid, i, t)
             for qid, terms in enumerate(term_lists)

@@ -25,6 +25,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..regime import local_frame
 from ..sources.files import load_table
 
 __all__ = [
@@ -1357,7 +1358,7 @@ def dsir_importance(
             F.sum(F.col("is_tgt").cast("long")).alias("cnt_tgt"),
             F.sum((~F.col("is_tgt")).cast("long")).alias("cnt_pool"),
         )
-        buckets = spark.createDataFrame(sketch.collect(), schema=sketch.schema)
+        buckets = local_frame(spark, sketch.collect(), sketch.schema)
     else:
         buckets = bucket_counts
     totals = buckets.agg(
@@ -1613,7 +1614,7 @@ def quality_nb_select(
         )
         cached += [feats, labels]
         sketch = _qnb_sketch(feats, labels, id_col)
-        counts = spark.createDataFrame(sketch.collect(), schema=sketch.schema)
+        counts = local_frame(spark, sketch.collect(), sketch.schema)
     else:
         # pre-trained scoring path: NO corpus repartition (ADVICE r11 —
         # the broadcast-weights join + per-doc groupBy moves one slim

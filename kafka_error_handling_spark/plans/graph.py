@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..regime import forced_regime, local_frame
 from ..sources.files import load_table as _t
 
 # total rank mass, parts-per-1e12 — big enough that `rank DIV deg` keeps
@@ -708,6 +709,7 @@ KCORE_ROUNDS = 3
 # driver pass instead of 3 × (degree agg + 2 semi-joins + checkpoint +
 # distinct-count job).  Over budget the distributed loop is untouched.
 KCORE_DRIVER_CONF = "spark.keh.kcore.driverPeel"  # auto|true|false
+_KCORE_SCHEMA = "round long, n_nodes long, n_edges long"
 
 
 def _driver_kcore_rows(rows, rounds: int, k: int) -> list[tuple[int, int, int]]:
@@ -753,13 +755,10 @@ def kcore_rounds(
     :data:`KCORE_DRIVER_CONF` conf pins either regime."""
     spark = edges.sparkSession
     if driver_peel is None:
-        mode = str(spark.conf.get(KCORE_DRIVER_CONF, "auto")).strip().lower()
-        if mode in ("true", "false"):
-            driver_peel = mode == "true"
+        driver_peel = forced_regime(spark, KCORE_DRIVER_CONF)
     if driver_peel is True:
-        return spark.createDataFrame(
-            _driver_kcore_rows(edges.collect(), rounds, k),
-            "round long, n_nodes long, n_edges long",
+        return local_frame(
+            spark, _driver_kcore_rows(edges.collect(), rounds, k), _KCORE_SCHEMA
         )
     if driver_peel is None:
         from ..conf import driver_max_result_bytes
@@ -767,9 +766,8 @@ def kcore_rounds(
         budget = driver_max_result_bytes(spark) // CC_BYTES_PER_EDGE
         probe = edges.take(budget + 1)
         if len(probe) <= budget:
-            return spark.createDataFrame(
-                _driver_kcore_rows(probe, rounds, k),
-                "round long, n_nodes long, n_edges long",
+            return local_frame(
+                spark, _driver_kcore_rows(probe, rounds, k), _KCORE_SCHEMA
             )
     rows = []
     cur = edges
@@ -803,7 +801,7 @@ def kcore_rounds(
             .count()
         )
         rows.append((rnd, n_nodes, obs.get["n_edges"]))
-    return spark.createDataFrame(rows, "round long, n_nodes long, n_edges long")
+    return local_frame(spark, rows, _KCORE_SCHEMA)
 
 
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -897,12 +895,13 @@ def _driver_union_find(edges: DataFrame, rows) -> DataFrame:
     schema = StructType(
         [StructField("node", ntype, False), StructField("comp_id", ntype, False)]
     )
-    # the RDD-backed frame has no stats, so consumers' joins would never
+    # the local relation carries size stats, so consumers' joins can
     # auto-broadcast it; it is budget-bounded by construction (the regime
-    # only engages under the maxResultSize-derived edge cap), so carry the
-    # broadcast hint — a billion-doc corpus left-joining a small component
-    # frame must not shuffle itself by the id
-    return F.broadcast(edges.sparkSession.createDataFrame(out, schema))
+    # only engages under the maxResultSize-derived edge cap), so the
+    # broadcast hint stays for sessions with auto-broadcast off — a
+    # billion-doc corpus left-joining a small component frame must not
+    # shuffle itself by the id
+    return F.broadcast(local_frame(edges.sparkSession, out, schema))
 
 
 def connected_components(
@@ -969,10 +968,10 @@ def connected_components(
         from ..conf import driver_max_result_bytes
 
         spark = edges.sparkSession
-        mode = str(spark.conf.get(CC_DRIVER_UF_CONF, "auto")).strip().lower()
-        if mode == "true":
+        driver_uf = forced_regime(spark, CC_DRIVER_UF_CONF)
+        if driver_uf is True:
             return _driver_union_find(edges, edges.collect())
-        if mode != "false":
+        if driver_uf is None:
             budget = driver_max_result_bytes(spark) // CC_BYTES_PER_EDGE
             rows = edges.take(budget + 1)
             if len(rows) <= budget:

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..regime import local_frame
 from ..sources.files import load_table as _t
 
 # 8-bit keys -> 16-bit z-value; 256 files per layout (top 8 z bits =
@@ -95,7 +96,8 @@ def layout_pruning_report(orders: DataFrame) -> DataFrame:
 
     d_lo, d_hi = _P_DATE
     c_lo, c_hi = _P_CUST
-    preds = spark.createDataFrame(
+    preds = local_frame(
+        spark,
         [("date_range", "k2", d_lo, d_hi), ("cust_range", "k1", c_lo, c_hi)],
         "predicate string, key string, lo long, hi long",
     )

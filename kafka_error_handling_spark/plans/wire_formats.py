@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..regime import local_frame
+
 __all__ = ["QUERIES"]
 
 # (case_id, input_value, topic, partition, offset, description,
@@ -71,7 +73,7 @@ _FIXTURE_SCHEMA = (
 
 
 def _fixture_frame(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_FIXTURES, _FIXTURE_SCHEMA)
+    return local_frame(spark, _FIXTURES, _FIXTURE_SCHEMA)
 
 
 def _dead_letter_col():

@@ -189,3 +189,14 @@ def test_evidence_only_cli_rejects_extra_arguments():
     assert "--evidence-only takes no other arguments" in (out.stderr + out.stdout)
     # and it must not have rewritten the ledger on the failing path
     assert os.path.getmtime(os.path.join(_REPO, "EVIDENCE.md")) == before
+
+
+def test_ab_trees_output_name_is_filename_safe():
+    """`.` (the working tree) used to yield `runs/ab_<rev>_vs_..txt`."""
+    from ab_trees import _rev_slug
+
+    assert _rev_slug(".") == "worktree"
+    assert _rev_slug("HEAD~1") == "HEAD1"
+    assert _rev_slug("origin/main") == "originmain"
+    assert _rev_slug("9281479078ee78ebded12ae6") == "9281479078ee"
+    assert _rev_slug("~^") == "rev"

@@ -1010,6 +1010,8 @@ def test_connected_components_driver_uf_matches_loop(spark):
     edges = spark.createDataFrame(und, "src long, dst long")
     uf = connected_components(edges)  # auto → driver path (tiny graph)
     loop = connected_components(edges, broadcast_labels=True)
+    # the driver path's labels re-enter Spark as an Arrow local relation
+    assert "LocalTableScan" in uf._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, uf.collect())) == sorted(map(tuple, loop.collect()))
     assert uf.schema.fieldNames() == loop.schema.fieldNames()
     assert [f.dataType for f in uf.schema.fields] == [
@@ -1020,7 +1022,7 @@ def test_connected_components_driver_uf_matches_loop(spark):
     try:
         forced = connected_components(edges)
         # loop output localCheckpoints → Scan ExistingRDD; the driver path
-        # is a LocalTableScan — distinguish the regimes by plan shape
+        # is a LocalTableScan (asserted above) — the plans tell them apart
         plan = forced._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" not in plan
         assert sorted(map(tuple, forced.collect())) == sorted(
@@ -1126,10 +1128,28 @@ def test_kcore_driver_peel_matches_distributed_loop(spark, monkeypatch):
     def _boom(*a, **k):
         raise AssertionError("driver peel entered under conf=false")
 
+    def _local(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    # both regimes return their few round-stat rows as an Arrow local
+    # relation (no Python-worker scan); the regime itself is told apart
+    # by whether the driver helper runs
+    spark.conf.set(G.KCORE_DRIVER_CONF, "true")
+    try:
+        driver = G.kcore_rounds(edges)
+        assert _local(driver)
+        assert sorted(map(tuple, driver.collect())) == sorted(
+            map(tuple, loop.collect())
+        )
+    finally:
+        spark.conf.unset(G.KCORE_DRIVER_CONF)
+
     monkeypatch.setattr(G, "_driver_kcore_rows", _boom)
     spark.conf.set(G.KCORE_DRIVER_CONF, "false")
     try:
         forced = G.kcore_rounds(edges)
+        assert _local(forced)
         assert sorted(map(tuple, forced.collect())) == sorted(
             map(tuple, loop.collect())
         )

@@ -368,22 +368,26 @@ def test_wide_eval_cache_released_on_gc(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def n_persisted():
-        return len(spark.sparkContext._jsc.getPersistentRDDs())
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    baseline = n_persisted()
+    # track this call's own RDD ids: caches left by earlier tests may be
+    # released (their finalizers fire on any GC) while this test runs, so
+    # a bare count can drop below its starting value either way
+    before = persisted()
     out = search_eval_macro(docs, emb, EVAL_WIDE_QUERIES)
     assert getattr(out, "_keh_caches", None), "re-anchor protocol lost the cache"
     out.collect()
-    assert n_persisted() > baseline, "the barrier never materialized a cache"
+    ours = persisted() - before
+    assert ours, "the barrier never materialized a cache"
     del out
     gc.collect()
     deadline = time.time() + 10
     while time.time() < deadline:
-        if n_persisted() <= baseline:
+        if not persisted() & ours:
             break
         time.sleep(0.5)
-    assert n_persisted() <= baseline, "wide-eval cache survived GC of the result"
+    assert not persisted() & ours, "wide-eval cache survived GC of the result"
 
 
 def test_bm25_topk_multi_matches_single_query(spark, sf_dir):

@@ -16,7 +16,8 @@ profiler only imports the tree's own ``__spark_entry__``, so the timed
 code is still the target tree's.
 
 Usage: python tools/ab_trees.py REV_A REV_B [--runs N] q1 [q2 ...]
-Writes runs/ab_<REV_A>_vs_<REV_B>.txt and prints a summary table.
+Writes runs/ab_<A>_vs_<B>.txt (``.`` named ``worktree``, other revs cut to
+their first 12 alphanumerics) and prints a summary table.
 """
 
 from __future__ import annotations
@@ -30,6 +31,14 @@ import tempfile
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PROFILER = os.path.join("tools", "profile_query.py")
+
+
+def _rev_slug(rev: str) -> str:
+    """Filename-safe tag for a rev: ``.`` (the working tree) becomes
+    ``worktree``; otherwise the rev's alphanumerics, first 12 kept."""
+    if rev == ".":
+        return "worktree"
+    return "".join(c for c in rev if c.isalnum())[:12] or "rev"
 
 
 def _leg(tree_dir: str, names: list[str], runs: int) -> dict[str, list[float]]:
@@ -109,8 +118,7 @@ def main() -> None:
         for n, v in t.items():
             summary.setdefault(n, {}).setdefault(rev, {})[order] = min(v)
     out_path = os.path.join(
-        _ROOT, "runs",
-        f"ab_{rev_a.replace('/', '_')[:12]}_vs_{rev_b.replace('/', '_')[:12]}.txt",
+        _ROOT, "runs", f"ab_{_rev_slug(rev_a)}_vs_{_rev_slug(rev_b)}.txt"
     )
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
     with open(out_path, "w") as f:
