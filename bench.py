@@ -472,10 +472,13 @@ def main() -> None:
     }
     # memoized-artifact observability (VERDICT r6 item 3): per-stamp-path
     # [hits, builds] in the detail file shows whether e.g. the Lloyd
-    # centroid memo was reused or silently rebuilt inside a timed query
+    # centroid memo was reused or silently rebuilt inside a timed query;
+    # the regime log shows what each bounded driver probe chose, and why
     from kafka_error_handling_spark import memo as _memo
+    from kafka_error_handling_spark import regime as _regime
 
     memo_stats = dict(_memo.STATS)
+    decisions = list(_regime.DECISIONS)
     spark.stop()
     # cross-commit calibration LAST, after the bench JVM is gone (its two
     # subprocess sessions should not compete with the main one for memory)
@@ -485,7 +488,9 @@ def main() -> None:
     try:
         os.makedirs(os.path.dirname(detail_path) or ".", exist_ok=True)
         with open(detail_path, "w") as f:
-            json.dump(dict(summary, queries=timings, memo=memo_stats), f)
+            json.dump(
+                dict(summary, queries=timings, memo=memo_stats, regime=decisions), f
+            )
     except OSError:
         pass
     print(json.dumps(summary))

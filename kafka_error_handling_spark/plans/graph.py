@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..regime import forced_regime, local_frame
+from ..regime import bounded_collect, forced_regime, local_frame
 from ..sources.files import load_table as _t
 
 # total rank mass, parts-per-1e12 — big enough that `rank DIV deg` keeps
@@ -702,9 +702,9 @@ QUERIES["graph_bfs_depth"] = (q_graph_bfs_depth, _SQL_BFS)
 KCORE_K = 4
 KCORE_ROUNDS = 3
 
-# Driver peel regime (r15, the CC union-find pattern): k-core peeling is
-# pure integer degree arithmetic over the CANONICAL support-2 edge list —
-# the same bounded artifact the CC driver union-find collects — so below
+# Driver peel regime (r15, the CC driver-labeling pattern): k-core peeling
+# is pure integer degree arithmetic over the CANONICAL support-2 edge list
+# — the same bounded artifact the CC driver regime collects — so below
 # the maxResultSize-derived edge budget the 3 rounds run as one O(E)
 # driver pass instead of 3 × (degree agg + 2 semi-joins + checkpoint +
 # distinct-count job).  Over budget the distributed loop is untouched.
@@ -712,20 +712,53 @@ KCORE_DRIVER_CONF = "spark.keh.kcore.driverPeel"  # auto|true|false
 _KCORE_SCHEMA = "round long, n_nodes long, n_edges long"
 
 
-def _driver_kcore_rows(rows, rounds: int, k: int) -> list[tuple[int, int, int]]:
-    """Peel a collected canonical edge list on the driver; returns the
+def _driver_edges(edges: DataFrame, regime: bool | None, site: str):
+    """The edge list as an Arrow table when a driver regime applies —
+    forced (``regime`` True), or auto (None) and within the
+    :data:`CC_BYTES_PER_EDGE`-priced budget — else ``None``."""
+    if regime is True:
+        return edges.toArrow()
+    if regime is None:
+        from ..conf import driver_max_result_bytes
+
+        budget = driver_max_result_bytes(edges.sparkSession) // CC_BYTES_PER_EDGE
+        return bounded_collect(edges, budget, site)
+    return None
+
+
+def _edge_index(table):
+    """``(ids, src, dst)``: the sorted distinct node ids of a collected
+    edge table and each edge's endpoints as dense indices into them."""
+    import numpy as np
+
+    if table.column("src").null_count or table.column("dst").null_count:
+        raise ValueError("edge list holds a null node id")
+    src = table.column("src").to_numpy()
+    ids, inv = np.unique(
+        np.concatenate([src, table.column("dst").to_numpy()]), return_inverse=True
+    )
+    return ids, inv[: len(src)], inv[len(src) :]
+
+
+def _driver_kcore_rows(table, rounds: int, k: int) -> list[tuple[int, int, int]]:
+    """Peel a collected canonical edge table on the driver; returns the
     same (round, n_nodes, n_edges) tuples as the distributed loop —
     integer degree counts, so the arithmetic is exact by construction."""
-    cur = [(r[0], r[1]) for r in rows]
+    import numpy as np
+
+    ids, src, dst = _edge_index(table)
+
+    def degrees(mask):
+        return np.bincount(np.concatenate([src[mask], dst[mask]]), minlength=len(ids))
+
+    alive = np.ones(len(src), dtype=bool)
+    deg = degrees(alive)
     out = []
     for rnd in range(1, rounds + 1):
-        deg: dict = {}
-        for a, b in cur:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        cur = [(a, b) for a, b in cur if deg[a] >= k and deg[b] >= k]
-        nodes = {a for a, _ in cur} | {b for _, b in cur}
-        out.append((rnd, len(nodes), len(cur)))
+        keep = deg >= k
+        alive &= keep[src] & keep[dst]
+        deg = degrees(alive)
+        out.append((rnd, int(np.count_nonzero(deg)), int(np.count_nonzero(alive))))
     return out
 
 
@@ -750,25 +783,17 @@ def kcore_rounds(
 
     ``driver_peel=None`` (auto) engages the r15 driver regime while the
     edge list fits the ``spark.driver.maxResultSize``-derived byte
-    budget (:data:`CC_BYTES_PER_EDGE` pricing, one bounded ``take()``
-    that doubles as the collect); an explicit bool or the
-    :data:`KCORE_DRIVER_CONF` conf pins either regime."""
+    budget (:data:`CC_BYTES_PER_EDGE` pricing, one
+    :func:`~kafka_error_handling_spark.regime.bounded_collect` probe,
+    then the edges cross as Arrow columns and peel in numpy); an
+    explicit bool or the :data:`KCORE_DRIVER_CONF` conf pins either
+    regime.  A null node id raises ``ValueError`` in the driver regime."""
     spark = edges.sparkSession
     if driver_peel is None:
         driver_peel = forced_regime(spark, KCORE_DRIVER_CONF)
-    if driver_peel is True:
-        return local_frame(
-            spark, _driver_kcore_rows(edges.collect(), rounds, k), _KCORE_SCHEMA
-        )
-    if driver_peel is None:
-        from ..conf import driver_max_result_bytes
-
-        budget = driver_max_result_bytes(spark) // CC_BYTES_PER_EDGE
-        probe = edges.take(budget + 1)
-        if len(probe) <= budget:
-            return local_frame(
-                spark, _driver_kcore_rows(probe, rounds, k), _KCORE_SCHEMA
-            )
+    table = _driver_edges(edges, driver_peel, "graph.kcore_rounds")
+    if table is not None:
+        return local_frame(spark, _driver_kcore_rows(table, rounds, k), _KCORE_SCHEMA)
     rows = []
     cur = edges
     for rnd in range(1, rounds + 1):
@@ -851,57 +876,56 @@ QUERIES["graph_kcore"] = (q_graph_kcore, _sql_kcore())
 
 CC_MAX_ROUNDS = 64  # safety bound on the convergence loop, not a semantic cap
 
-# Driver union-find regime (r14, guide §8 "decide with small rows"): below
-# this byte budget the edge list is pulled once and labeled with an O(E α(E))
-# union-find on the driver instead of running the distributed fixpoint.  The
-# broadcast-labels regime already ships the label frame THROUGH the driver
-# once per round; for a small graph the one-shot edge pull moves strictly
-# fewer bytes than R rounds of label broadcast and replaces ~R×3 jobs
-# (join + agg + checkpoint per round) with one bounded take().  The budget
-# derives from spark.driver.maxResultSize like every other regime crossover;
-# 4 KiB/edge prices the collected Row objects plus the Python-side
-# union-find dict entries with slack (≈256k edges at the 1g default —
-# beyond that the loop's fixed cost is amortized anyway).
+# Driver labeling regime (r14, guide §8 "decide with small rows"): below
+# this byte budget the edge list is pulled once and labeled on the driver
+# instead of running the distributed fixpoint.  The broadcast-labels regime
+# already ships the label frame THROUGH the driver once per round; for a
+# small graph the one-shot edge pull moves strictly fewer bytes than R
+# rounds of label broadcast and replaces ~R×3 jobs (join + agg +
+# checkpoint per round) with one bounded probe and one Arrow collect.  The
+# budget derives from spark.driver.maxResultSize like every other regime
+# crossover (≈256k edges at the 1g default — beyond that the loop's fixed
+# cost is amortized anyway).  The edges arrive as two Arrow columns and
+# are peeled or labeled in numpy, so at its peak the Python driver holds
+# about 120 bytes per edge: 16 in the Arrow table and ~100 in numpy index
+# and label arrays plus the output rows (traced on a 262k-edge random
+# graph).  4 KiB/edge was sized for pickled Row objects and dict entries;
+# the value is kept so that no regime crossover moves, which leaves ~30×
+# slack.  The JVM side (the probe's budget + 1 buffered rows, the Arrow
+# batches counted against maxResultSize) is smaller still.
 CC_DRIVER_UF_CONF = "spark.keh.cc.driverUnionFind"  # auto|true|false
 CC_BYTES_PER_EDGE = 4096
 
 
-def _driver_union_find(edges: DataFrame, rows) -> DataFrame:
-    """Label a collected canonical edge list on the driver; returns the
-    same (node, comp_id = component-minimum id) frame as the loop."""
-    from pyspark.sql.types import StructField, StructType
+def _driver_components(table) -> list[tuple]:
+    """Label a collected canonical edge table on the driver; returns the
+    same sorted (node, comp_id = component-minimum id) rows as the loop.
 
-    parent: dict = {}
+    Min-label propagation with pointer jumping over dense indices, where
+    ``lab[v]`` is a smaller-or-equal index in v's component.  Each round
+    hooks the two roots of every edge onto the smaller of them (both
+    directions), then jumps pointers (``lab = lab[lab]``) until every
+    node points at its root; it stops when a round changes nothing.
+    Hooking roots, not the endpoints themselves, matters on long paths
+    with shuffled ids: a 20,000-node one takes 11 rounds, where endpoint
+    hooking took ~13,000.  At the fixpoint both ends of every edge
+    share a root, so each component has one root: its smallest index,
+    which is its minimum id because ``np.unique`` sorts the ids."""
+    import numpy as np
 
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in rows:
-        a, b = r[0], r[1]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            # smaller root stays the root → every root is its component's
-            # minimum, matching the loop's min-label convergence exactly
-            parent[rb] = ra
-    out = sorted((n, find(n)) for n in parent)
-    ntype = edges.schema["src"].dataType
-    schema = StructType(
-        [StructField("node", ntype, False), StructField("comp_id", ntype, False)]
-    )
-    # the local relation carries size stats, so consumers' joins can
-    # auto-broadcast it; it is budget-bounded by construction (the regime
-    # only engages under the maxResultSize-derived edge cap), so the
-    # broadcast hint stays for sessions with auto-broadcast off — a
-    # billion-doc corpus left-joining a small component frame must not
-    # shuffle itself by the id
-    return F.broadcast(local_frame(edges.sparkSession, out, schema))
+    ids, src, dst = _edge_index(table)
+    lab = np.arange(len(ids))
+    while True:
+        prev = lab.copy()
+        ls, ld = lab[src], lab[dst]
+        np.minimum.at(lab, ls, ld)
+        np.minimum.at(lab, ld, ls)
+        jumped = lab[lab]
+        while not np.array_equal(jumped, lab):
+            lab, jumped = jumped, jumped[jumped]
+        if np.array_equal(lab, prev):
+            break
+    return list(zip(ids.tolist(), ids[lab].tolist()))
 
 
 def connected_components(
@@ -955,27 +979,39 @@ def connected_components(
     is loud, never wrong.
 
     r14: when ``broadcast_labels`` is left on auto (None), a third regime
-    sits below both loop regimes — the driver union-find (see
-    ``CC_DRIVER_UF_CONF``): one bounded ``take()`` probe that doubles as
-    the collect, engaged only while the edge list fits the
-    maxResultSize-derived byte budget.  Passing an explicit
+    sits below both loop regimes — driver labeling (see
+    ``CC_DRIVER_UF_CONF`` and :func:`_driver_components`), engaged only
+    while the edge list fits the maxResultSize-derived byte budget: one
+    :func:`~kafka_error_handling_spark.regime.bounded_collect` probe,
+    then the edges cross as Arrow columns.  Passing an explicit
     ``broadcast_labels`` pins a LOOP regime (the tests' lever), and the
     conf can force the driver path on/off cluster-wide.  Over budget the
-    probe cost is one partial pass of the edge pipeline (CollectLimit
-    stops early), against the ≥6 full passes the loop replaces.
+    probe is one partial pass of the edge pipeline (``take`` scales up
+    partitions only until it has budget + 1 rows) that hands Python one
+    row, against the ≥6 full passes the loop replaces.  A null node id
+    raises ``ValueError`` in the driver regime.
     """
     if broadcast_labels is None:
-        from ..conf import driver_max_result_bytes
+        from pyspark.sql.types import StructField, StructType
 
         spark = edges.sparkSession
-        driver_uf = forced_regime(spark, CC_DRIVER_UF_CONF)
-        if driver_uf is True:
-            return _driver_union_find(edges, edges.collect())
-        if driver_uf is None:
-            budget = driver_max_result_bytes(spark) // CC_BYTES_PER_EDGE
-            rows = edges.take(budget + 1)
-            if len(rows) <= budget:
-                return _driver_union_find(edges, rows)
+        table = _driver_edges(
+            edges,
+            forced_regime(spark, CC_DRIVER_UF_CONF),
+            "graph.connected_components",
+        )
+        if table is not None:
+            ntype = edges.schema["src"].dataType
+            schema = StructType(
+                [StructField(c, ntype, False) for c in ("node", "comp_id")]
+            )
+            # the local relation carries size stats, so consumers' joins can
+            # auto-broadcast it; it is budget-bounded by construction (the
+            # regime only engages under the maxResultSize-derived edge cap),
+            # so the broadcast hint stays for sessions with auto-broadcast
+            # off — a billion-doc corpus left-joining a small component
+            # frame must not shuffle itself by the id
+            return F.broadcast(local_frame(spark, _driver_components(table), schema))
     nb = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

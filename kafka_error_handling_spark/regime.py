@@ -1,14 +1,28 @@
-"""Driver-regime plumbing: how a result computed on the driver re-enters
-Spark, and how a ``spark.keh.*`` regime switch is read.
+"""Driver-regime plumbing: how an adaptive site reads a small frame onto
+the driver, how its result re-enters Spark, and how a ``spark.keh.*``
+regime switch is read.
 
 Several adaptive sites finish on the driver once their input fits the
 ``spark.driver.maxResultSize``-derived budget (the k-core driver peel and
-the connected-components union-find in ``plans/graph.py``), and a few
-more build small literal frames (query-term tables, predicate lists,
-collected sketches).  All of them hand their rows back through
-:func:`local_frame`.
+the connected-components driver labeling in ``plans/graph.py``), and a
+few more build small literal frames (query-term tables, predicate lists,
+collected sketches).  Both directions go through Arrow: the graph sites
+read their edges with :func:`bounded_collect` and hand their rows back
+through :func:`local_frame`.
 
-Why Arrow, not ``spark.createDataFrame(rows, ddl)``: PySpark turns a list
+Reading: ``take`` or ``collect`` unpickles every row into a Python
+``Row``, about 3.5 µs a row (the graph regimes read 68k edges per
+``registry_regimes`` benchmark pass).  :func:`bounded_collect` probes with
+``df.offset(budget).take(1)``, which keeps ``take``'s incremental
+partition scale-up (one task on a 200-partition frame) and hands Python
+at most one row; only a frame under budget is then read, once, with
+``toArrow()``.  ``df.limit(budget + 1).toArrow()`` is not the probe:
+it plans through ``CollectLimit``'s execute path, which runs every
+partition and then a single-partition shuffle — 201 tasks where the
+``take`` probe runs 1 on the same 200-partition frame, and over budget
+it would funnel up to budget × partitions rows into one reducer.
+
+Writing: PySpark turns ``spark.createDataFrame(rows, ddl)`` over a list
 of Python rows into a pickled RDD plus an identity ``map`` that runs in a
 Python worker (``Scan ExistingRDD`` in the plan).  Every task of that
 map pays the worker's fixed start-up cost before it reads a row — about
@@ -34,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, _parse_datatype_string
 
-__all__ = ["forced_regime", "local_frame"]
+__all__ = ["DECISIONS", "bounded_collect", "forced_regime", "local_frame"]
 
 
 def local_frame(
@@ -65,6 +79,32 @@ def local_frame(
         columns.append(col)
     table = pa.Table.from_arrays(columns, schema=arrow_schema)
     return spark.createDataFrame(table, schema=schema)
+
+
+# One ``(site, choice, rows_seen, budget)`` entry per bounded_collect call,
+# oldest first.  ``choice`` is "driver" (the frame fit and was collected;
+# rows_seen is its row count) or "distributed" (over budget; rows_seen is
+# budget + 1, the most the probe looked at).  Filled from what the call
+# already knows, so logging adds no job.  Process-local and never reset;
+# readers snapshot-and-diff, as with ``memo.STATS``.
+DECISIONS: list[tuple[str, str, int, int]] = []
+
+
+def bounded_collect(df: DataFrame, max_rows: int, site: str) -> pa.Table | None:
+    """``df`` as an Arrow table if it has at most ``max_rows`` rows, else
+    ``None``; the choice is logged in :data:`DECISIONS` under ``site``.
+
+    The probe is ``df.offset(max_rows).take(1)``: ``take`` scans one
+    partition first and scales up only while it still lacks rows, the
+    offset rows stay in the JVM, and at most one row reaches Python.
+    Under budget the frame is then read once more with ``toArrow()``, so
+    ``df`` should be deterministic (a checkpointed or memoized frame)."""
+    if df.offset(max_rows).take(1):
+        DECISIONS.append((site, "distributed", max_rows + 1, max_rows))
+        return None
+    table = df.toArrow()
+    DECISIONS.append((site, "driver", table.num_rows, max_rows))
+    return table
 
 
 def forced_regime(spark: SparkSession, conf: str) -> bool | None:

@@ -692,6 +692,12 @@ def _final_tree(df) -> str:
     must be pinned here (the tools/postexec_plan.py mechanism; ADVICE
     r14 asked for these pins after the r14 census falsified a
     static-reuse claim)."""
+    return _final_plan(df).split("== Initial Plan ==")[0]
+
+
+def _final_plan(df) -> str:
+    """Execute ``df``'s OWN adaptive plan and return its whole formatted
+    explain: the final tree, the initial tree and the per-node details."""
     spark = df.sparkSession
     qe = df._jdf.queryExecution()
     qe.executedPlan().execute().count()
@@ -701,7 +707,7 @@ def _final_tree(df) -> str:
         )
     )
     assert "isFinalPlan=true" in plan
-    return plan.split("== Initial Plan ==")[0]
+    return plan
 
 
 def test_lm_score_final_plan_two_fanouts_with_reuse(spark, sf_dir):
@@ -744,7 +750,13 @@ def test_q15_final_plan_aggregates_lineitem_once(spark, sf_dir):
 
     from kafka_error_handling_spark.plans.tpch_rest import q15_top_supplier
 
-    tree = _final_tree(q15_top_supplier(spark, sf_dir))
+    plan = _final_plan(q15_top_supplier(spark, sf_dir))
+    tree = plan.split("== Initial Plan ==")[0]
     assert _re.search(r"ReusedExchange|ReusedSubquery|table cache", tree)
-    # two scans total in the final tree: lineitem once + the supplier dim
-    assert len(_re.findall(r"Scan parquet\s+\(\d+\)", tree)) == 2
+    # each final-tree scan's relation is in its "(N) Scan parquet" details
+    details = {
+        int(m.group(1)): m.group(0)
+        for m in _re.finditer(r"^\((\d+)\) .*?(?=\n\n|\Z)", plan, _re.M | _re.S)
+    }
+    scans = [details[int(i)] for i in _re.findall(r"Scan parquet\s+\((\d+)\)", tree)]
+    assert sum("/lineitem.parquet]" in d for d in scans) == 1

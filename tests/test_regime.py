@@ -1,15 +1,19 @@
-"""regime.local_frame / regime.forced_regime: driver results re-enter
-Spark as Arrow local relations, and regime switches reject unknown
-values."""
+"""regime.local_frame / regime.bounded_collect / regime.forced_regime:
+driver regimes read small frames as Arrow tables through one bounded
+probe, their results re-enter Spark as Arrow local relations, every
+probe is logged, and regime switches reject unknown values."""
 
+import inspect
 import pathlib
+import time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from kafka_error_handling_spark.plans.wire_formats import _FIXTURE_SCHEMA, _FIXTURES
-from kafka_error_handling_spark.regime import forced_regime, local_frame
+from kafka_error_handling_spark import regime
+from kafka_error_handling_spark.regime import bounded_collect, forced_regime, local_frame
 
 _CC_SCHEMA = StructType(
     [StructField("node", LongType(), False), StructField("comp_id", LongType(), False)]
@@ -153,3 +157,116 @@ def test_cc_driver_union_find_rejects_unknown_value(spark):
             G.connected_components(edges)
     finally:
         spark.conf.unset(G.CC_DRIVER_UF_CONF)
+
+
+@pytest.mark.parametrize("n", [0, 3])
+def test_bounded_collect_budget_edge(spark, n):
+    """``n`` rows fit a budget of ``n`` and ``n + 1`` rows do not;
+    ``n=0`` is the empty frame."""
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(i, -i) for i in range(rows)], "src long, dst long"
+        )
+
+    table = bounded_collect(frame(n), n, "test.edge")
+    assert table.schema.names == ["src", "dst"]
+    assert table.column("src").to_pylist() == list(range(n))
+    assert bounded_collect(frame(n + 1), n, "test.edge") is None
+    assert bounded_collect(frame(n), n + 5, "test.edge").num_rows == n
+
+
+def _tasks_in_group(sc, group):
+    """Tasks of every stage of the group's jobs, once the status store
+    has seen all of them finish (it is fed asynchronously)."""
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        if jobs and all(j is not None and j.status == "SUCCEEDED" for j in jobs):
+            break
+        assert time.time() < deadline, f"jobs of {group} never finished: {jobs}"
+        time.sleep(0.1)
+    return len(jobs), sum(
+        tracker.getStageInfo(s).numTasks for j in jobs for s in j.stageIds
+    )
+
+
+def test_bounded_collect_over_budget_runs_one_task(spark):
+    """On a 200-partition frame the over-budget probe keeps take's
+    incremental partition scale-up: one job of one task, where
+    ``limit(n + 1).toArrow()`` would run all 200 partitions plus a
+    single-partition shuffle.  Logging the decision adds no job."""
+    sc = spark.sparkContext
+    df = spark.range(0, 20_000, 1, 200).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    assert df.rdd.getNumPartitions() == 200
+    sc.setJobGroup("test.bounded_collect.over", "over-budget probe")
+    try:
+        assert bounded_collect(df, 5, "test.over") is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _tasks_in_group(sc, "test.bounded_collect.over") == (1, 1)
+    assert regime.DECISIONS[-1] == ("test.over", "distributed", 6, 5)
+
+
+def test_graph_driver_regimes_log_their_decisions(spark, monkeypatch):
+    """Both graph sites log (site, choice, rows_seen, budget): the driver
+    choice under the default budget, the distributed one once the
+    per-edge price leaves a 1-edge budget — with identical results."""
+    from kafka_error_handling_spark.conf import driver_max_result_bytes
+    from kafka_error_handling_spark.plans import graph as G
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
+    budget = driver_max_result_bytes(spark) // G.CC_BYTES_PER_EDGE
+
+    def run():
+        start = len(regime.DECISIONS)
+        kc = sorted(map(tuple, G.kcore_rounds(edges).collect()))
+        cc = sorted(map(tuple, G.connected_components(edges).collect()))
+        return kc, cc, regime.DECISIONS[start:]
+
+    kc, cc, log = run()
+    assert log == [
+        ("graph.kcore_rounds", "driver", 3, budget),
+        ("graph.connected_components", "driver", 3, budget),
+    ]
+    monkeypatch.setattr(G, "CC_BYTES_PER_EDGE", driver_max_result_bytes(spark))
+    kc_loop, cc_loop, log = run()
+    assert log == [
+        ("graph.kcore_rounds", "distributed", 2, 1),
+        ("graph.connected_components", "distributed", 2, 1),
+    ]
+    assert (kc, cc) == (kc_loop, cc_loop)
+    assert cc == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
+
+
+@pytest.mark.parametrize("site", ["kcore_rounds", "connected_components"])
+def test_graph_driver_regimes_reject_null_ids(spark, site):
+    from kafka_error_handling_spark.plans import graph as G
+
+    edges = spark.createDataFrame([(1, 2), (2, None)], "src long, dst long")
+    with pytest.raises(ValueError, match="null node id"):
+        getattr(G, site)(edges).collect()
+
+
+def test_graph_driver_regimes_read_edges_only_through_arrow():
+    """No pickled-row read is left in the two graph driver regimes: the
+    probe is bounded_collect and the read is toArrow()."""
+    from kafka_error_handling_spark.plans import graph as G
+
+    funcs = [
+        G.kcore_rounds,
+        G.connected_components,
+        G._driver_edges,
+        G._edge_index,
+        G._driver_kcore_rows,
+        G._driver_components,
+    ]
+    offenders = [
+        f.__name__
+        for f in funcs
+        if ".take(" in inspect.getsource(f) or ".collect()" in inspect.getsource(f)
+    ]
+    assert offenders == []
