@@ -18,6 +18,23 @@ Callers own the cache dict and the key, because scoping differs: plain
 Python values (centroid lists) are valid across sessions, while
 checkpointed DataFrames are session-bound and must key on the Spark
 ``applicationId``.
+
+Remembered results: an entry also keeps what later consumers derive from
+its value, through :func:`remembered`, so work that depends only on the
+memoized value runs once per entry.  Its one user is
+``regime.bounded_collect``: the graph driver regimes (``plans/graph.py``)
+read the memoized support-2 edge frame into the driver, and the entry
+keeps that read per budget — the ``pa.Table`` (about 16 B per edge as
+two int64 columns, still priced by the unchanged ``CC_BYTES_PER_EDGE``
+budget; ~1 MB for the 68k edges of a ``registry_regimes`` benchmark
+pass) or ``None`` for "over budget".  A remembered result is found from
+the value alone (by identity, only while the entry holding that value is
+the live one under its key) and is dropped with the entry: when the
+stamp changes and the entry is rebuilt, when a new session keys a new
+entry on its own ``applicationId``, or when the caller clears its cache.
+At the 100 TB design point the edge frame is far over budget, so the
+entry keeps only the "over budget" outcome, and the probe job is not
+repeated.
 """
 
 from __future__ import annotations
@@ -33,6 +50,11 @@ T = TypeVar("T")
 # silently rebuilt inside the timing).  Process-local, reset never; readers
 # snapshot-and-diff.
 STATS: dict[str, list] = {}
+
+# id(value) -> (cache, key) of the entry built with it, so that
+# :func:`remembered` finds an entry from its value.  The identity check
+# there makes a stale pair (a cleared cache, a reused id) harmless.
+_OWNERS: dict[int, tuple[dict, object]] = {}
 
 
 def stamped_memo(cache: dict, key, stamp_path: str, build: Callable[[], T]) -> T:
@@ -51,5 +73,25 @@ def stamped_memo(cache: dict, key, stamp_path: str, build: Callable[[], T]) -> T
         return hit[1]
     counters[1] += 1
     val = build()
-    cache[key] = (stamp, val)
+    if hit is not None:
+        _OWNERS.pop(id(hit[1]), None)
+    # (stamp, value, remembered results of consumers of the value)
+    cache[key] = (stamp, val, {})
+    _OWNERS[id(val)] = (cache, key)
     return val
+
+
+def remembered(value, name, compute: Callable[[], T]) -> T:
+    """``compute()``, kept under ``name`` on the live entry whose value is
+    ``value``: the first call per entry computes and later calls return
+    the kept result.  For a value no live entry holds, every call
+    computes.  ``compute`` must depend only on ``value`` (and on what
+    ``name`` spells out)."""
+    owner = _OWNERS.get(id(value))
+    entry = owner[0].get(owner[1]) if owner is not None else None
+    if entry is None or entry[1] is not value:
+        return compute()
+    kept = entry[2]
+    if name not in kept:
+        kept[name] = compute()
+    return kept[name]

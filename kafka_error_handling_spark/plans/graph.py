@@ -715,15 +715,18 @@ _KCORE_SCHEMA = "round long, n_nodes long, n_edges long"
 def _driver_edges(edges: DataFrame, regime: bool | None, site: str):
     """The edge list as an Arrow table when a driver regime applies —
     forced (``regime`` True), or auto (None) and within the
-    :data:`CC_BYTES_PER_EDGE`-priced budget — else ``None``."""
-    if regime is True:
-        return edges.toArrow()
+    :data:`CC_BYTES_PER_EDGE`-priced budget — else ``None``.  Both reads
+    go through ``bounded_collect``, so on the memoized edge frame of
+    :func:`_sig_edges_for` they run at most once per memo entry and
+    budget; forced False never reads."""
+    if regime is False:
+        return None
+    budget = None
     if regime is None:
         from ..conf import driver_max_result_bytes
 
         budget = driver_max_result_bytes(edges.sparkSession) // CC_BYTES_PER_EDGE
-        return bounded_collect(edges, budget, site)
-    return None
+    return bounded_collect(edges, budget, site)
 
 
 def _edge_index(table):
@@ -785,7 +788,8 @@ def kcore_rounds(
     edge list fits the ``spark.driver.maxResultSize``-derived byte
     budget (:data:`CC_BYTES_PER_EDGE` pricing, one
     :func:`~kafka_error_handling_spark.regime.bounded_collect` probe,
-    then the edges cross as Arrow columns and peel in numpy); an
+    then the edges cross as Arrow columns and peel in numpy; both are
+    remembered on a memoized edge frame, see :func:`_driver_edges`); an
     explicit bool or the :data:`KCORE_DRIVER_CONF` conf pins either
     regime.  A null node id raises ``ValueError`` in the driver regime."""
     spark = edges.sparkSession
@@ -882,7 +886,10 @@ CC_MAX_ROUNDS = 64  # safety bound on the convergence loop, not a semantic cap
 # already ships the label frame THROUGH the driver once per round; for a
 # small graph the one-shot edge pull moves strictly fewer bytes than R
 # rounds of label broadcast and replaces ~R×3 jobs (join + agg +
-# checkpoint per round) with one bounded probe and one Arrow collect.  The
+# checkpoint per round) with one bounded probe and one Arrow collect, and
+# on the memoized support-2 edge frame both run once per memo entry and
+# budget: the entry keeps the table (16 B/edge, counted in the 120 below)
+# or the over-budget outcome, shared by the k-core and CC sites.  The
 # budget derives from spark.driver.maxResultSize like every other regime
 # crossover (≈256k edges at the 1g default — beyond that the loop's fixed
 # cost is amortized anyway).  The edges arrive as two Arrow columns and

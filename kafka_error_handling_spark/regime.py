@@ -11,16 +11,20 @@ read their edges with :func:`bounded_collect` and hand their rows back
 through :func:`local_frame`.
 
 Reading: ``take`` or ``collect`` unpickles every row into a Python
-``Row``, about 3.5 µs a row (the graph regimes read 68k edges per
-``registry_regimes`` benchmark pass).  :func:`bounded_collect` probes with
-``df.offset(budget).take(1)``, which keeps ``take``'s incremental
+``Row``, about 3.5 µs a row (the graph regimes' edge list in the
+``registry_regimes`` benchmark has 68k edges).  :func:`bounded_collect`
+probes with ``df.offset(budget).take(1)``, which keeps ``take``'s incremental
 partition scale-up (one task on a 200-partition frame) and hands Python
 at most one row; only a frame under budget is then read, once, with
 ``toArrow()``.  ``df.limit(budget + 1).toArrow()`` is not the probe:
 it plans through ``CollectLimit``'s execute path, which runs every
 partition and then a single-partition shuffle — 201 tasks where the
 ``take`` probe runs 1 on the same 200-partition frame, and over budget
-it would funnel up to budget × partitions rows into one reducer.
+it would funnel up to budget × partitions rows into one reducer.  When
+the frame is a memoized artifact (``memo.stamped_memo``), the outcome —
+the table or "over budget" — is kept on its memo entry per budget, so
+the k-core and CC sites share one probe and one read per entry instead
+of paying both on every query.
 
 Writing: PySpark turns ``spark.createDataFrame(rows, ddl)`` over a list
 of Python rows into a pickled RDD plus an identity ``map`` that runs in a
@@ -47,6 +51,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, _parse_datatype_string
+
+from .memo import remembered
 
 __all__ = ["DECISIONS", "bounded_collect", "forced_regime", "local_frame"]
 
@@ -84,26 +90,39 @@ def local_frame(
 # One ``(site, choice, rows_seen, budget)`` entry per bounded_collect call,
 # oldest first.  ``choice`` is "driver" (the frame fit and was collected;
 # rows_seen is its row count) or "distributed" (over budget; rows_seen is
-# budget + 1, the most the probe looked at).  Filled from what the call
-# already knows, so logging adds no job.  Process-local and never reset;
-# readers snapshot-and-diff, as with ``memo.STATS``.
-DECISIONS: list[tuple[str, str, int, int]] = []
+# budget + 1, the most the probe looked at).  ``budget`` is None for a
+# forced read.  Filled from what the call already knows, so logging adds
+# no job.  Process-local and never reset; readers snapshot-and-diff, as
+# with ``memo.STATS``.
+DECISIONS: list[tuple[str, str, int, int | None]] = []
 
 
-def bounded_collect(df: DataFrame, max_rows: int, site: str) -> pa.Table | None:
+def bounded_collect(df: DataFrame, max_rows: int | None, site: str) -> pa.Table | None:
     """``df`` as an Arrow table if it has at most ``max_rows`` rows, else
     ``None``; the choice is logged in :data:`DECISIONS` under ``site``.
+    ``max_rows=None`` reads ``df`` with no budget and no probe.
 
     The probe is ``df.offset(max_rows).take(1)``: ``take`` scans one
     partition first and scales up only while it still lacks rows, the
     offset rows stay in the JVM, and at most one row reaches Python.
     Under budget the frame is then read once more with ``toArrow()``, so
-    ``df`` should be deterministic (a checkpointed or memoized frame)."""
-    if df.offset(max_rows).take(1):
+    ``df`` should be deterministic (a checkpointed or memoized frame).
+
+    When ``df`` is the value of a live ``memo.stamped_memo`` entry, the
+    outcome (table or over budget) is kept on that entry per
+    ``max_rows`` (:func:`~kafka_error_handling_spark.memo.remembered`):
+    later calls with the same budget run no Spark job and still log."""
+
+    def read():
+        if max_rows is not None and df.offset(max_rows).take(1):
+            return None
+        return df.toArrow()
+
+    table = remembered(df, ("bounded_collect", max_rows), read)
+    if table is None:
         DECISIONS.append((site, "distributed", max_rows + 1, max_rows))
-        return None
-    table = df.toArrow()
-    DECISIONS.append((site, "driver", table.num_rows, max_rows))
+    else:
+        DECISIONS.append((site, "driver", table.num_rows, max_rows))
     return table
 
 

@@ -32,6 +32,7 @@ from ..operators.capture import ERROR_COL, RESULT_COL
 __all__ = ["from_json_captured", "from_csv_captured", "from_avro_captured"]
 
 _CORRUPT = "_corrupt_record"
+_PARSED = "__keh_parsed"
 
 
 def _with_corrupt(schema: Union[StructType, str]) -> Tuple[StructType, StructType]:
@@ -57,6 +58,15 @@ def _captured_frame(
     stay NULL on both sides (a serde has no user fn to call on null;
     matches ``from_json`` null semantics).
     """
+    if _PARSED in df.columns:
+        raise ValueError(f"input must not already contain {_PARSED}")
+    # the parse is bound in its own projection and referenced from there:
+    # inline, the optimizer prunes one copy to a schema without the
+    # corrupt field, subexpression elimination cannot share the two copies
+    # and every row is parsed twice.  CollapseProject keeps the binding
+    # because the parse is not cheap and is referenced more than once.
+    df = df.withColumn(_PARSED, parsed)
+    parsed = F.col(_PARSED)
     is_corrupt = parsed[_CORRUPT].isNotNull() | (raw.isNotNull() & parsed.isNull())
     clean = F.struct(*[parsed[f].alias(f) for f in payload_fields])
     result = F.when(~is_corrupt & raw.isNotNull(), clean)
@@ -72,7 +82,7 @@ def _captured_frame(
         ),
     )
     r = F.struct(result.alias(RESULT_COL), error.alias(ERROR_COL))
-    return df.withColumn(processed_col, r)
+    return df.withColumn(processed_col, r).drop(_PARSED)
 
 
 def from_json_captured(

@@ -270,3 +270,238 @@ def test_graph_driver_regimes_read_edges_only_through_arrow():
         if ".take(" in inspect.getsource(f) or ".collect()" in inspect.getsource(f)
     ]
     assert offenders == []
+
+
+# ---------------------------------------------------------------------------
+# Remembered reads: a memoized frame is read into the driver at most once per
+# memo entry and budget
+# ---------------------------------------------------------------------------
+
+
+def test_remembered_follows_the_live_entry(tmp_path):
+    """``memo.remembered`` computes once per live entry; a value no live
+    entry holds (never memoized, stamp changed, cache cleared) computes
+    on every call."""
+    from kafka_error_handling_spark import memo
+
+    stamp = tmp_path / "input.bin"
+    stamp.write_bytes(b"a")
+    cache, calls = {}, []
+
+    def build():
+        return object()
+
+    def compute():
+        calls.append(None)
+        return len(calls)
+
+    loose = object()
+    assert memo.remembered(loose, "n", compute) == 1
+    assert memo.remembered(loose, "n", compute) == 2
+    value = memo.stamped_memo(cache, "k", str(stamp), build)
+    assert memo.remembered(value, "n", compute) == 3
+    assert memo.remembered(value, "n", compute) == 3
+    assert memo.remembered(value, "m", compute) == 4  # another name
+    stamp.write_bytes(b"bb")  # new stamp: the entry is rebuilt
+    fresh = memo.stamped_memo(cache, "k", str(stamp), build)
+    assert fresh is not value
+    assert memo.remembered(value, "n", compute) == 5  # no longer live
+    assert memo.remembered(fresh, "n", compute) == 6
+    assert memo.remembered(fresh, "n", compute) == 6
+    cache.clear()
+    assert memo.remembered(fresh, "n", compute) == 7
+
+
+def _write_lineitem(sf_dir, n_orders, seed):
+    """A two-column lineitem: ``n_orders`` orders of 3-5 of 14 parts, so
+    the support-2 co-purchase graph is small and non-empty."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(seed)
+    ok, pk = [], []
+    for order in range(n_orders):
+        for part in rng.sample(range(1, 15), rng.randint(3, 5)):
+            ok.append(order)
+            pk.append(part)
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array(ok, pa.int64()), "l_partkey": pa.array(pk, pa.int64())}),
+        f"{sf_dir}/lineitem.parquet",
+    )
+
+
+@pytest.fixture
+def memo_edges(spark, tmp_path):
+    """``get()`` → the memoized support-2 edge frame of a generated
+    lineitem in ``tmp_path``; the memo entries are dropped afterwards."""
+    from kafka_error_handling_spark.plans import graph as G
+
+    sf_dir = str(tmp_path)
+    _write_lineitem(sf_dir, 40, seed=1)
+    yield sf_dir, lambda: G._sig_edges_for(spark, sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
+    G._WEIGHTED_CACHE.pop(key, None)
+    G._SIG_EDGES_CACHE.pop(key, None)
+
+
+def _in_group(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _jobs_of(spark, group, fn):
+    """``(fn(), Spark jobs fn ran)``.  The status store is fed in event
+    order, so once a sentinel job run after ``fn`` shows in its own group,
+    every job of ``fn`` shows in ``group``."""
+    sc = spark.sparkContext
+    out = _in_group(sc, group, fn)
+    _in_group(sc, group + ".end", spark.range(1).count)
+    _tasks_in_group(sc, group + ".end")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _loop_results(edges):
+    from kafka_error_handling_spark.plans import graph as G
+
+    return (
+        _rows(G.kcore_rounds(edges, driver_peel=False)),
+        _rows(G.connected_components(edges, broadcast_labels=True)),
+    )
+
+
+def _budget(spark):
+    from kafka_error_handling_spark.conf import driver_max_result_bytes
+    from kafka_error_handling_spark.plans import graph as G
+
+    return driver_max_result_bytes(spark) // G.CC_BYTES_PER_EDGE
+
+
+def test_memoized_edges_are_read_once(spark, memo_edges):
+    """The first driver-regime read of the memoized edge frame probes and
+    reads; every later one — the k-core and CC sites included — runs no
+    job, logs one decision per call, and gives the forced loop's results."""
+    from kafka_error_handling_spark.plans import graph as G
+
+    _, get = memo_edges
+    edges = get()
+    assert get() is edges
+    start = len(regime.DECISIONS)
+    table, first = _jobs_of(spark, "test.remember.first", lambda: G._driver_edges(edges, None, "test.first"))
+    assert first >= 2  # the probe and the Arrow read
+    again, n_jobs = _jobs_of(spark, "test.remember.again", lambda: G._driver_edges(get(), None, "test.again"))
+    assert again is table and n_jobs == 0
+    (kc, cc), n_jobs = _jobs_of(
+        spark,
+        "test.remember.sites",
+        lambda: (G.kcore_rounds(get()), G.connected_components(get())),
+    )
+    assert n_jobs == 0
+    assert (_rows(kc), _rows(cc)) == _loop_results(edges)
+    n, budget = table.num_rows, _budget(spark)
+    assert n > 0
+    assert regime.DECISIONS[start:] == [
+        ("test.first", "driver", n, budget),
+        ("test.again", "driver", n, budget),
+        ("graph.kcore_rounds", "driver", n, budget),
+        ("graph.connected_components", "driver", n, budget),
+    ]
+
+
+def test_over_budget_outcome_is_remembered(spark, memo_edges, monkeypatch):
+    """Under a 1-edge budget the first call probes; the second runs no
+    probe job and both sites take the loop, with the loop's results."""
+    from kafka_error_handling_spark.conf import driver_max_result_bytes
+    from kafka_error_handling_spark.plans import graph as G
+
+    _, get = memo_edges
+    want = _loop_results(get())
+    monkeypatch.setattr(G, "CC_BYTES_PER_EDGE", driver_max_result_bytes(spark))
+    out, first = _jobs_of(spark, "test.over.first", lambda: G._driver_edges(get(), None, "test.o1"))
+    assert out is None and first >= 1
+    out, again = _jobs_of(spark, "test.over.again", lambda: G._driver_edges(get(), None, "test.o2"))
+    assert out is None and again == 0
+    assert regime.DECISIONS[-1] == ("test.o2", "distributed", 2, 1)
+
+    def _boom(*a, **k):
+        raise AssertionError("driver regime entered over budget")
+
+    monkeypatch.setattr(G, "_driver_kcore_rows", _boom)
+    monkeypatch.setattr(G, "_driver_components", _boom)
+    start = len(regime.DECISIONS)
+    assert (_rows(G.kcore_rounds(get())), _rows(G.connected_components(get()))) == want
+    assert regime.DECISIONS[start:] == [
+        ("graph.kcore_rounds", "distributed", 2, 1),
+        ("graph.connected_components", "distributed", 2, 1),
+    ]
+
+
+def test_a_different_budget_reprobes(spark, memo_edges, monkeypatch):
+    from kafka_error_handling_spark.conf import driver_max_result_bytes
+    from kafka_error_handling_spark.plans import graph as G
+
+    _, get = memo_edges
+    table = G._driver_edges(get(), None, "test.b1")
+    n = table.num_rows
+    # a budget of exactly n edges: still fits, but was never checked
+    monkeypatch.setattr(G, "CC_BYTES_PER_EDGE", driver_max_result_bytes(spark) // n)
+    assert _budget(spark) == n
+    out, n_jobs = _jobs_of(spark, "test.budget.n", lambda: G._driver_edges(get(), None, "test.b2"))
+    assert out.num_rows == n and n_jobs >= 2
+    monkeypatch.undo()
+    out, n_jobs = _jobs_of(spark, "test.budget.back", lambda: G._driver_edges(get(), None, "test.b3"))
+    assert out is table and n_jobs == 0
+
+
+def test_new_lineitem_stamp_rereads(spark, memo_edges):
+    """Rewriting lineitem.parquet rebuilds the memo entry; the driver
+    regimes read the new edges and their results follow the new data."""
+    from kafka_error_handling_spark.plans import graph as G
+
+    sf_dir, get = memo_edges
+    old = get()
+    old_results = (_rows(G.kcore_rounds(old)), _rows(G.connected_components(old)))
+    old_n = G._driver_edges(old, None, "test.s1").num_rows
+    _write_lineitem(sf_dir, 90, seed=2)
+    new = get()
+    assert new is not old
+    table, n_jobs = _jobs_of(spark, "test.stamp.new", lambda: G._driver_edges(new, None, "test.s2"))
+    assert n_jobs >= 2 and table.num_rows == new.count() != old_n
+    got = (_rows(G.kcore_rounds(new)), _rows(G.connected_components(new)))
+    assert got == _loop_results(new) != old_results
+
+
+def test_forced_regimes_on_a_memoized_frame(spark, memo_edges):
+    """Forced false never reads; forced true reads once, with no probe,
+    and logs no budget."""
+    from kafka_error_handling_spark.plans import graph as G
+
+    _, get = memo_edges
+    get()  # builds the memo entry
+    start = len(regime.DECISIONS)
+    out, n_jobs = _jobs_of(spark, "test.forced.false", lambda: G._driver_edges(get(), False, "test.f"))
+    assert out is None and n_jobs == 0
+    assert len(regime.DECISIONS) == start
+    table, n_jobs = _jobs_of(spark, "test.forced.true", lambda: G._driver_edges(get(), True, "test.t1"))
+    assert n_jobs == 1  # the Arrow read alone
+    again, n_jobs = _jobs_of(spark, "test.forced.again", lambda: G._driver_edges(get(), True, "test.t2"))
+    assert again is table and n_jobs == 0
+    n = table.num_rows
+    assert regime.DECISIONS[start:] == [("test.t1", "driver", n, None), ("test.t2", "driver", n, None)]
+    for conf in (G.KCORE_DRIVER_CONF, G.CC_DRIVER_UF_CONF):
+        spark.conf.set(conf, "false")
+    try:
+        got = (_rows(G.kcore_rounds(get())), _rows(G.connected_components(get())))
+    finally:
+        for conf in (G.KCORE_DRIVER_CONF, G.CC_DRIVER_UF_CONF):
+            spark.conf.unset(conf)
+    assert len(regime.DECISIONS) == start + 2
+    assert got == _loop_results(get())

@@ -66,6 +66,23 @@ def test_serde_capture_stays_jvm_side(spark):
     assert "EvalPython" not in plan
 
 
+def test_serde_capture_parses_each_record_once(spark):
+    """Each captured frame's executed plan holds exactly one parser node:
+    the parse is bound once and the result and error branches read it,
+    instead of Spark re-parsing per reference (5 ``from_json`` and 6
+    ``from_csv`` nodes when the parse was handed over inline)."""
+    js = spark.createDataFrame([(1, '{"k": 1}'), (2, "{")], "id int, payload string")
+    csv = spark.createDataFrame([(1, "5,1.5"), (2, "x,y")], "id int, line string")
+    for frame, parser in [
+        (from_json_captured(js, "payload", "k int, s string"), "from_json("),
+        (from_csv_captured(csv, "line", "a int, b double"), "from_csv("),
+    ]:
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert plan.count(parser) == 1, plan
+        assert frame.columns == frame.drop("r").columns + ["r"]
+        assert len(errors(frame).collect()) == 1
+
+
 def test_from_json_captured_streaming_dual_sink(spark, tmp_path):
     """The serde edge composes with the streaming runner: corrupt payloads
     reach the DLQ sink, good ones the value sink, in one pass."""

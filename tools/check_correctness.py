@@ -38,6 +38,13 @@ TABLES = [
     "lineitem", "events", "documents", "embeddings",
 ]
 
+# Oracles run with fewer DuckDB threads than the default.  The peak of
+# ``dedup_exact_substring``'s oracle (every document's 15-gram strings
+# materialized by ``list_transform``) lies outside DuckDB's buffer manager,
+# so ``memory_limit`` does not bound it, and it grows with threads: alone at
+# sf0.1 it peaks at 11,050 MiB RSS with 4 threads and 6,301 MiB with 1.
+ORACLE_THREADS = {"dedup_exact_substring": 1}
+
 
 def _canon(v) -> str:
     if v is None:
@@ -363,7 +370,10 @@ def main():
             n_pass += 1
             passed_names.append(name)
             continue
+        threads = ORACLE_THREADS.get(name)
         try:
+            if threads:
+                con.execute(f"SET threads = {threads}")
             rel = con.sql(oracles[name])
             dcols = [d[0] for d in rel.description]
             drows = rel.fetchall()
@@ -371,6 +381,9 @@ def main():
             print(f"FAIL {name}: duckdb error: {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
             continue
+        finally:
+            if threads:
+                con.execute("RESET threads")
         problems = []
         if len(srows) != len(drows):
             problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
