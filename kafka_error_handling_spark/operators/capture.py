@@ -20,12 +20,14 @@ Shared semantics, identical to the reference:
 
 Architecture notes (scale):
 
-- The wrapped Python function is the slow path by definition; it runs inside
-  an **Arrow-batched pandas UDF with a per-row loop**, so one bad row poisons
-  neither the batch nor the task, while JVM↔Python transfer stays vectorized.
-- Capture UDFs are marked ``asNondeterministic()`` so Catalyst never
-  duplicates them into both the success and the error branch — the wrapped
-  function must run exactly once per record (SURVEY.md §4).
+- The wrapped Python function is the slow path by definition; it runs in
+  the shared per-record loop (:mod:`.loop`) inside a nondeterministic
+  ``arrow_udf`` (map/flatMap shapes) or ``mapInArrow`` (processor shapes),
+  so one bad row poisons neither the batch nor the task, while JVM↔Python
+  transfer stays vectorized.
+- Nondeterminism stops Catalyst from duplicating a capture UDF into both
+  the success and the error branch — the wrapped function must run exactly
+  once per record (SURVEY.md §4).
 - Splitting success/error is two cheap JVM-side ``filter`` + ``select``
   projections of one DataFrame; in streaming, pair with
   ``streaming.runner.run_captured`` (single ``foreachBatch`` + persist).
@@ -33,22 +35,15 @@ Architecture notes (scale):
 
 from __future__ import annotations
 
+from operator import itemgetter
 from typing import Any, Callable, Iterable, Optional, Sequence, Union
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DataType, StructField, StructType
 
-from ..model import (
-    ERROR_SCHEMA,
-    ErrorFilter,
-    error_payload,
-    is_recoverable,
-    processed_schema,
-)
+from ..model import ErrorFilter, error_payload, is_recoverable
+from .loop import ERROR_COL, RESULT_COL, OnError, column_udf, process_records
 
 __all__ = [
     "capture_udf",
@@ -65,149 +60,86 @@ __all__ = [
     "kv_struct_type",
 ]
 
-# Column names used for the ProcessedValue analog.
-RESULT_COL = "result"
-ERROR_COL = "error"
 
+def capture_policy(
+    error_filter: Optional[ErrorFilter],
+    input_value: Callable[[tuple], Any] = itemgetter(-1),
+) -> OnError:
+    """Re-raise if ``error_filter(exc)`` (default :func:`is_recoverable`),
+    else the full error payload rendering ``input_value(args)`` (default:
+    the value of a column shape's ``(value,)`` / ``(key, value)`` args)."""
+    flt = error_filter or is_recoverable
 
-def _norm(v: Any) -> Any:
-    """Normalize pandas null sentinels (NaN / NaT / NA) to None for the user
-    fn — Arrow hands nullable numeric columns to pandas as float NaN, which
-    must read as the reference's Java null.  (Genuine NaN doubles are also
-    mapped to None; Spark itself blurs this at the Arrow boundary.)"""
-    if v is None:
-        return None
-    if v is pd.NaT or v is pd.NA:
-        return None
-    if isinstance(v, float) and v != v:
-        return None
-    return v
+    def on_error(args, exc):
+        if flt(exc):
+            raise exc
+        return error_payload(input_value(args), exc)
 
-
-def _drop_payload(exc: Exception) -> dict:
-    """Minimal error payload for the log-and-drop path: the error row is
-    filtered out immediately, so skip the (expensive) traceback rendering.
-    Shared by _run_one and the inlined single-arg hot loop so the shape
-    can't drift between the two (a fresh dict per call — rows must not
-    alias one mutable payload)."""
-    return {
-        "input_value": None,
-        "error_class": type(exc).__name__,
-        "message": None,
-        "stack_trace": None,
-    }
-
-
-def _run_one(
-    fn: Callable[..., Any],
-    args: Sequence[Any],
-    rendered_input: Any,
-    error_filter: ErrorFilter,
-    full_payload: bool = True,
-):
-    """One record through the wrapped fn → (result, error_dict)."""
-    try:
-        return fn(*args), None
-    except Exception as exc:  # noqa: BLE001 — Throwables pass through untouched
-        if error_filter(exc):
-            raise
-        if not full_payload:
-            return None, _drop_payload(exc)
-        return None, error_payload(rendered_input, exc)
-
-
-def _norm_for(series: pd.Series) -> Optional[Callable[[Any], Any]]:
-    """Pick the cheapest null-normalizer for a batch column, ONCE per batch.
-
-    Arrow→pandas null sentinels are dtype-determined: float dtypes carry
-    NaN, datetime dtypes carry NaT, everything else (strings, structs,
-    lists arrive as object dtype) carries plain ``None``.  Only the float
-    and datetime cases need per-row normalization — running the generic
-    isinstance chain on every row of every column costs ~0.3 µs/row, which
-    is real money inside the capture hot loop (VERDICT r2 #6)."""
-    kind = series.dtype.kind
-    if kind == "f":
-        return lambda v: None if v != v else v
-    if kind in ("M", "m"):
-        return lambda v: None if v is pd.NaT else v
-    if kind in ("i", "u", "b"):
-        return None  # non-nullable numpy dtypes carry no null sentinel
-    if series.dtype == object:
-        return None  # Arrow yields plain None for nulls in object columns
-    return _norm
+    return on_error
 
 
 def capture_udf(
     fn: Callable[..., Any],
     result_type: Union[DataType, str],
     error_filter: Optional[ErrorFilter] = None,
-    n_args: int = 1,
-    full_payload: bool = True,
 ):
     """Column-level capture primitive.
 
-    Returns a nondeterministic pandas UDF mapping ``n_args`` input columns to
+    Returns a nondeterministic ``arrow_udf`` mapping its input columns to
     ``struct<result: result_type, error: ERROR_SCHEMA>``.  The rendered
     ``input_value`` in the error payload is the *last* argument (the value;
     key-value shapes pass ``(key, value)``), matching the reference where
     ``ProcessingError`` carries the input value (``ProcessingError.java:43-47``).
     """
-    if not callable(fn):
-        # build-time contract: the reference throws NPE from the factory on
-        # null args (ErrorCapturingKeyValueMapperTopologyTest.java:79-91)
-        raise TypeError(f"wrapped function must be callable, got {type(fn).__name__}")
-    flt = error_filter or is_recoverable
-    if isinstance(result_type, str):
-        result_type = DataType.fromDDL(result_type)
-    out_schema = processed_schema(result_type)
-
-    @pandas_udf(out_schema)
-    def _capture(*cols: pd.Series) -> pd.DataFrame:
-        n = len(cols[0])
-        results = [None] * n
-        errs = [None] * n
-        if len(cols) == 1:
-            # specialized single-arg hot loop: no zip/tuple packing, no
-            # per-row normalizer dispatch, fn call inlined in the try
-            norm = _norm_for(cols[0])
-            vals = cols[0].tolist()
-            for i, v in enumerate(vals):
-                if norm is not None:
-                    v = norm(v)
-                try:
-                    results[i] = fn(v)
-                except Exception as exc:  # noqa: BLE001
-                    if flt(exc):
-                        raise
-                    if full_payload:
-                        errs[i] = error_payload(v, exc)
-                    else:
-                        errs[i] = _drop_payload(exc)
-        else:
-            norms = [_norm_for(c) for c in cols]
-            rows = zip(*[c.tolist() for c in cols])
-            for i, raw in enumerate(rows):
-                args = tuple(
-                    a if nm is None else nm(a) for a, nm in zip(raw, norms)
-                )
-                results[i], errs[i] = _run_one(fn, args, args[-1], flt, full_payload)
-        return pd.DataFrame({RESULT_COL: results, ERROR_COL: errs})
-
-    return _capture.asNondeterministic()
+    return column_udf(fn, result_type, capture_policy(error_filter))
 
 
-def _apply_capture(
+def apply_records(
     df: DataFrame,
     fn: Callable[..., Any],
     result_type: DataType,
     in_cols: Sequence[Union[str, Column]],
-    error_filter: Optional[ErrorFilter],
+    on_error: OnError,
     processed_col: str,
-    full_payload: bool = True,
 ) -> DataFrame:
-    udf = capture_udf(fn, result_type, error_filter, n_args=len(in_cols), full_payload=full_payload)
+    """``processed_col = struct<result, error>`` of ``fn`` over ``in_cols``."""
+    udf = column_udf(fn, result_type, on_error)
     cols = [F.col(c) if isinstance(c, str) else c for c in in_cols]
     return df.withColumn(processed_col, udf(*cols))
+
+
+def pair_result(fn: Callable[[Any, Any], Any]) -> Callable[[Any, Any], Any]:
+    """``fn(key, value) -> (new_key, new_value)``, unpacked inside the loop
+    so a result that is not a pair is that record's error."""
+
+    def _pair(k, v):
+        out = fn(k, v)
+        if out is None:
+            return None
+        nk, nv = out
+        return nk, nv
+
+    return _pair
+
+
+def list_result(fn: Callable[..., Any]) -> Callable[..., Any]:
+    """``fn(*args) -> iterable``, listed inside the loop."""
+
+    def _listed(*args):
+        out = fn(*args)
+        return None if out is None else list(out)
+
+    return _listed
+
+
+def pair_list_result(fn: Callable[[Any, Any], Any]) -> Callable[[Any, Any], Any]:
+    """``fn(key, value) -> iterable[(new_key, new_value)]``."""
+
+    def _pairs(k, v):
+        out = fn(k, v)
+        return None if out is None else [(nk, nv) for nk, nv in out]
+
+    return _pairs
 
 
 def kv_struct_type(key_type: DataType, value_type: DataType) -> StructType:
@@ -229,16 +161,14 @@ def capture_map_values(
     value_col: str = "value",
     error_filter: Optional[ErrorFilter] = None,
     processed_col: str = "r",
-    full_payload: bool = True,
 ) -> DataFrame:
     """``ErrorCapturingValueMapper.captureErrors`` (``ErrorCapturingValueMapper.java:57,86-95``).
 
     Adds ``processed_col = struct<result, error>``; the key (all other
     columns) is untouched.  Split with :func:`values` / :func:`errors`.
     """
-    return _apply_capture(
-        df, fn, result_type, [value_col], error_filter, processed_col, full_payload
-    )
+    on_error = capture_policy(error_filter)
+    return apply_records(df, fn, result_type, [value_col], on_error, processed_col)
 
 
 def capture_map_values_with_key(
@@ -249,16 +179,14 @@ def capture_map_values_with_key(
     value_col: str = "value",
     error_filter: Optional[ErrorFilter] = None,
     processed_col: str = "r",
-    full_payload: bool = True,
 ) -> DataFrame:
     """``ErrorCapturingValueMapperWithKey`` (``ErrorCapturingValueMapperWithKey.java:60,90-99``).
 
     ``fn(key, value)``; the key column is read-only and still untouched in
     the output.
     """
-    return _apply_capture(
-        df, fn, result_type, [key_col, value_col], error_filter, processed_col, full_payload
-    )
+    on_error = capture_policy(error_filter)
+    return apply_records(df, fn, result_type, [key_col, value_col], on_error, processed_col)
 
 
 def capture_map(
@@ -270,7 +198,6 @@ def capture_map(
     value_col: str = "value",
     error_filter: Optional[ErrorFilter] = None,
     processed_col: str = "r",
-    full_payload: bool = True,
 ) -> DataFrame:
     """``ErrorCapturingKeyValueMapper.captureErrors`` (``ErrorCapturingKeyValueMapper.java:63,94-107``).
 
@@ -279,22 +206,13 @@ def capture_map(
     key survives as the original ``key_col`` column ("new key is only
     relevant if no error occurs", ``ErrorCapturingKeyValueMapper.java:103-105``).
     """
-
-    def _kv(k, v):
-        out = fn(k, v)
-        if out is None:
-            return None
-        nk, nv = out
-        return {"key": nk, "value": nv}
-
-    return _apply_capture(
+    return apply_records(
         df,
-        _kv,
+        pair_result(fn),
         kv_struct_type(key_type, value_type),
         [key_col, value_col],
-        error_filter,
+        capture_policy(error_filter),
         processed_col,
-        full_payload,
     )
 
 
@@ -305,7 +223,6 @@ def capture_flat_map_values(
     value_col: str = "value",
     error_filter: Optional[ErrorFilter] = None,
     processed_col: str = "r",
-    full_payload: bool = True,
 ) -> DataFrame:
     """``ErrorCapturingFlatValueMapper`` (``ErrorCapturingFlatValueMapper.java:60,89-98``).
 
@@ -313,14 +230,13 @@ def capture_flat_map_values(
     :func:`values` explodes it (``explode_outer`` never drops error rows
     because they are filtered to the other branch first).
     """
-
-    def _flat(v):
-        out = fn(v)
-        return None if out is None else list(out)
-
-    return _apply_capture(
-        df, _flat, ArrayType(element_type), [value_col], error_filter, processed_col,
-        full_payload,
+    return apply_records(
+        df,
+        list_result(fn),
+        ArrayType(element_type),
+        [value_col],
+        capture_policy(error_filter),
+        processed_col,
     )
 
 
@@ -332,22 +248,15 @@ def capture_flat_map_values_with_key(
     value_col: str = "value",
     error_filter: Optional[ErrorFilter] = None,
     processed_col: str = "r",
-    full_payload: bool = True,
 ) -> DataFrame:
     """``ErrorCapturingFlatValueMapperWithKey`` (``...WithKey.java:62,92-101``)."""
-
-    def _flat(k, v):
-        out = fn(k, v)
-        return None if out is None else list(out)
-
-    return _apply_capture(
+    return apply_records(
         df,
-        _flat,
+        list_result(fn),
         ArrayType(element_type),
         [key_col, value_col],
-        error_filter,
+        capture_policy(error_filter),
         processed_col,
-        full_payload,
     )
 
 
@@ -360,28 +269,19 @@ def capture_flat_map(
     value_col: str = "value",
     error_filter: Optional[ErrorFilter] = None,
     processed_col: str = "r",
-    full_payload: bool = True,
 ) -> DataFrame:
     """``ErrorCapturingFlatKeyValueMapper`` (``ErrorCapturingFlatKeyValueMapper.java:67,102-115``).
 
     ``fn(key, value) -> iterable[(new_key, new_value)]``; result column is
     ``array<struct<key, value>>``.
     """
-
-    def _flat(k, v):
-        out = fn(k, v)
-        if out is None:
-            return None
-        return [{"key": nk, "value": nv} for nk, nv in out]
-
-    return _apply_capture(
+    return apply_records(
         df,
-        _flat,
+        pair_list_result(fn),
         ArrayType(kv_struct_type(key_type, value_type)),
         [key_col, value_col],
-        error_filter,
+        capture_policy(error_filter),
         processed_col,
-        full_payload,
     )
 
 
@@ -428,10 +328,15 @@ def errors(df: DataFrame, processed_col: str = "r") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Processor shapes — arbitrary 0..n forwards per record via mapInPandas
+# Processor shapes — arbitrary 0..n forwards per record via mapInArrow
 # (reference ``ErrorCapturingProcessor.java:164-176``,
 #  ``ErrorCapturingValueProcessor.java:159-168``)
 # ---------------------------------------------------------------------------
+
+
+def record_value(input_value_col: str) -> Callable[[tuple], Any]:
+    """The value of a processor shape's ``(row_dict,)`` args."""
+    return lambda args: args[0].get(input_value_col)
 
 
 def capture_process(
@@ -444,53 +349,37 @@ def capture_process(
 ) -> DataFrame:
     """``ErrorCapturingProcessor.captureErrors`` — the general ``process`` shape.
 
-    ``processor(row_dict)`` may forward 0..n result dicts (the Spark analog
-    of ``context.forward`` — ``ErrorCapturingApiProcessorContext.java:31-59``:
+    ``processor(row_dict)`` may forward 0..n results (the Spark analog of
+    ``context.forward`` — ``ErrorCapturingApiProcessorContext.java:31-59``:
     every forward is re-wrapped as a success).  Output schema:
     ``pass_through`` columns (default: all input columns) + ``result``
     (nullable ``result_type``) + ``error``.  Success rows: one per forward,
-    error NULL.  Error rows: one, result NULL.
-
-    Implemented with ``mapInPandas`` so multi-forward and per-row capture
-    stay inside one Arrow-batched pass — no driver involvement, scales with
-    partitions.
+    error NULL.  Error rows: one, result NULL, ``input_value`` rendered from
+    ``input_value_col`` (default: the last input column).
     """
-    flt = error_filter or is_recoverable
-    keep = list(pass_through) if pass_through is not None else list(df.columns)
-    ival = input_value_col or (df.columns[-1])
-    out_schema = StructType(
-        [df.schema[c] for c in keep]
-        + [
-            StructField(RESULT_COL, result_type, True),
-            StructField(ERROR_COL, ERROR_SCHEMA, True),
-        ]
-    )
+    on_error = capture_policy(error_filter, record_value(input_value_col or df.columns[-1]))
+    return process_records(df, processor, result_type, on_error, pass_through)
 
-    def _map(batches):
-        for pdf in batches:
-            out_rows = []
-            records = pdf.to_dict("records")
-            for rec in records:
-                rec = {k: _norm(v) for k, v in rec.items()}
-                base = {k: rec.get(k) for k in keep}
-                try:
-                    forwards = processor(dict(rec))
-                except Exception as exc:  # noqa: BLE001
-                    if flt(exc):
-                        raise
-                    row = dict(base)
-                    row[RESULT_COL] = None
-                    row[ERROR_COL] = error_payload(rec.get(ival), exc)
-                    out_rows.append(row)
-                    continue
-                for fwd in forwards or ():
-                    row = dict(base)
-                    row[RESULT_COL] = fwd
-                    row[ERROR_COL] = None
-                    out_rows.append(row)
-            yield pd.DataFrame(out_rows, columns=keep + [RESULT_COL, ERROR_COL])
 
-    return df.mapInPandas(_map, out_schema)
+def process_values(
+    df: DataFrame,
+    processor: Callable[[dict], Optional[Iterable[Any]]],
+    result_type: DataType,
+    on_error: OnError,
+    pass_through: Optional[Sequence[str]] = None,
+) -> DataFrame:
+    """The ``processValues`` shape over :func:`process_records`: a
+    non-struct ``result_type`` rides a one-field struct and is unwrapped."""
+    if isinstance(result_type, StructType):
+        return process_records(df, processor, result_type, on_error, pass_through)
+    wrapped = StructType([StructField("value", result_type, True)])
+
+    def _proc(rec):
+        out = processor(rec)
+        return None if out is None else [(v,) for v in out]
+
+    out = process_records(df, _proc, wrapped, on_error, pass_through)
+    return out.withColumn(RESULT_COL, F.col(RESULT_COL)["value"])
 
 
 def capture_process_values(
@@ -505,21 +394,5 @@ def capture_process_values(
     (``ErrorCapturingValueProcessor.java:68,159-168``): forwards carry only a
     new value; key columns pass through unchanged.
     """
-    wrapped_type = result_type
-    needs_wrap = not isinstance(result_type, StructType)
-    if needs_wrap:
-        wrapped_type = StructType([StructField("value", result_type, True)])
-
-        def _proc(rec):
-            out = processor(rec)
-            return None if out is None else [{"value": v} for v in out]
-
-    else:
-        _proc = processor
-
-    out = capture_process(
-        df, _proc, wrapped_type, error_filter, pass_through, input_value_col
-    )
-    if needs_wrap:
-        out = out.withColumn(RESULT_COL, F.col(RESULT_COL)["value"])
-    return out
+    on_error = capture_policy(error_filter, record_value(input_value_col or df.columns[-1]))
+    return process_values(df, processor, result_type, on_error, pass_through)

@@ -23,14 +23,12 @@ from __future__ import annotations
 
 from typing import Any, Callable, Iterable, Optional, Sequence
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DataType, StructType
 
 from ..model import ProcessingException
+from .loop import OnError, call_once, column_udf, process_records
 
 __all__ = [
     "describe_flat_map_values",
@@ -44,31 +42,60 @@ __all__ = [
     "describe_process",
 ]
 
+Describer = Callable[[tuple, Exception], ProcessingException]
+
+
+def value_message(args: tuple, exc: Exception) -> ProcessingException:
+    """``Cannot process <value>`` (``ErrorDescribingValueMapper.java:63-69``)."""
+    return ProcessingException.for_value(args[-1], exc)
+
+
+def key_value_message(args: tuple, exc: Exception) -> ProcessingException:
+    """``Cannot process ('<key>', '<value>')`` (``ErrorDescribingKeyValueMapper.java:65-71``)."""
+    return ProcessingException.for_key_value(args[0], args[1], exc)
+
+
+def column_message(with_key: bool) -> Describer:
+    return key_value_message if with_key else value_message
+
+
+def record_message(value_col: str, key_cols: Optional[Sequence[str]] = None) -> Describer:
+    """The message for a processor shape's ``(row_dict,)`` args: the value
+    of ``value_col``, keyed by ``key_cols`` when given."""
+
+    def describe(args, exc):
+        rec = args[0]
+        if not key_cols:
+            return ProcessingException.for_value(rec.get(value_col), exc)
+        key = tuple(rec.get(k) for k in key_cols)
+        return ProcessingException.for_key_value(
+            key[0] if len(key) == 1 else key, rec.get(value_col), exc
+        )
+
+    return describe
+
+
+def describe_policy(describe: Describer) -> OnError:
+    """Raise ``describe(args, exc)``, chained to the cause."""
+
+    def on_error(args, exc):
+        raise describe(args, exc) from exc
+
+    return on_error
+
 
 def describe_errors(fn: Callable[..., Any]) -> Callable[..., Any]:
     """``ErrorDescribingValueMapper.describeErrors`` — value-only message
     (``ErrorDescribingValueMapper.java:63-69``)."""
-
-    def _wrapped(*args):
-        try:
-            return fn(*args)
-        except Exception as exc:  # noqa: BLE001
-            raise ProcessingException.for_value(args[-1], exc) from exc
-
-    return _wrapped
+    on_error = describe_policy(value_message)
+    return lambda *args: call_once(fn, args, on_error)
 
 
 def describe_errors_with_key(fn: Callable[..., Any]) -> Callable[..., Any]:
     """``ErrorDescribingKeyValueMapper`` / ``...ValueMapperWithKey`` —
     key-and-value message (``ErrorDescribingKeyValueMapper.java:65-71``)."""
-
-    def _wrapped(key, value, *rest):
-        try:
-            return fn(key, value, *rest)
-        except Exception as exc:  # noqa: BLE001
-            raise ProcessingException.for_key_value(key, value, exc) from exc
-
-    return _wrapped
+    on_error = describe_policy(key_value_message)
+    return lambda *args: call_once(fn, args, on_error)
 
 
 def describe_udf(
@@ -76,47 +103,22 @@ def describe_udf(
     result_type: DataType,
     with_key: bool = False,
 ):
-    """Pandas-UDF wrapper re-raising enriched — the column-level primitive.
+    """``arrow_udf`` wrapper re-raising enriched — the column-level primitive.
 
-    Per-row loop inside an Arrow batch; the first failing record aborts the
-    task with a ``ProcessingException`` naming it (fail-fast is the point).
-
-    Struct ``result_type`` (the ``ErrorDescribingKeyValueMapper`` parity
-    shape, where results are ``struct<key, value>``) returns a
-    ``pd.DataFrame`` keyed by field name — pandas UDFs require a DataFrame,
-    not a Series, for struct returns (mirrors ``capture_udf``).
+    The first failing record aborts the task with a ``ProcessingException``
+    naming it (fail-fast is the point).  A struct ``result_type`` (the
+    ``ErrorDescribingKeyValueMapper`` parity shape, where results are
+    ``struct<key, value>``) takes dict or tuple results, like every family;
+    a ``None`` result there is a struct of NULL fields, not a NULL struct.
     """
-    wrapped = describe_errors_with_key(fn) if with_key else describe_errors(fn)
-
     if isinstance(result_type, StructType):
-        fields = [f.name for f in result_type.fields]
+        struct_fn = fn
 
-        @pandas_udf(result_type)
-        def _describe_struct(*cols: pd.Series) -> pd.DataFrame:
-            rows = zip(*[c.tolist() for c in cols])
-            out = [wrapped(*row) for row in rows]
-            recs = [
-                None
-                if r is None
-                else (r if isinstance(r, dict) else dict(zip(fields, r)))
-                for r in out
-            ]
-            return pd.DataFrame(
-                [
-                    {f: None for f in fields} if r is None else r
-                    for r in recs
-                ],
-                columns=fields,
-            )
+        def fn(*args):
+            out = struct_fn(*args)
+            return {} if out is None else out
 
-        return _describe_struct.asNondeterministic()
-
-    @pandas_udf(result_type)
-    def _describe(*cols: pd.Series) -> pd.Series:
-        rows = zip(*[c.tolist() for c in cols])
-        return pd.Series([wrapped(*row) for row in rows])
-
-    return _describe.asNondeterministic()
+    return column_udf(fn, result_type, describe_policy(column_message(with_key)), with_error=False)
 
 
 def describe_map_values(
@@ -170,40 +172,12 @@ def describe_process(
     value_col: Optional[str] = None,
 ) -> DataFrame:
     """``ErrorDescribingProcessor`` / ``ErrorDescribingValueProcessor``
-    (``ErrorDescribingProcessor.java:64,101-107``): mapInPandas wrapper
+    (``ErrorDescribingProcessor.java:64,101-107``): ``mapInArrow`` wrapper
     re-raising enriched; multi-forward supported like
     :func:`~kafka_error_handling_spark.operators.capture.capture_process`.
     """
-    keep = list(pass_through) if pass_through is not None else list(df.columns)
-    vcol = value_col or df.columns[-1]
-    kcols = list(key_cols) if key_cols else []
-    from pyspark.sql.types import StructField
-
-    out_schema = StructType(
-        [df.schema[c] for c in keep] + [StructField("result", result_type, True)]
-    )
-
-    def _map(batches):
-        for pdf in batches:
-            out_rows = []
-            for rec in pdf.to_dict("records"):
-                try:
-                    forwards = processor(dict(rec))
-                except Exception as exc:  # noqa: BLE001
-                    if kcols:
-                        key = tuple(rec.get(k) for k in kcols)
-                        key = key[0] if len(key) == 1 else key
-                        raise ProcessingException.for_key_value(
-                            key, rec.get(vcol), exc
-                        ) from exc
-                    raise ProcessingException.for_value(rec.get(vcol), exc) from exc
-                for fwd in forwards or ():
-                    row = {k: rec.get(k) for k in keep}
-                    row["result"] = fwd
-                    out_rows.append(row)
-            yield pd.DataFrame(out_rows, columns=keep + ["result"])
-
-    return df.mapInPandas(_map, out_schema)
+    on_error = describe_policy(record_message(value_col or df.columns[-1], key_cols))
+    return process_records(df, processor, result_type, on_error, pass_through, with_error=False)
 
 
 # Type-transparent flat aliases — the reference reuses the same describing

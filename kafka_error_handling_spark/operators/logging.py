@@ -34,10 +34,12 @@ from typing import Any, Callable, Iterable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import ArrayType, DataType
 
-from ..model import ErrorFilter, _render_for_message, is_recoverable
+from ..model import ErrorFilter, is_recoverable
 from . import capture as C
+from .describe import Describer, column_message, record_message
+from .loop import OnError, call_once, process_records
 
 __all__ = [
     "log_errors",
@@ -58,90 +60,67 @@ logger = logging.getLogger("kafka_error_handling_spark")
 OBSERVATION_PREFIX = "keh_dropped"
 _obs_counter = [0]
 
+DEFAULT_MAX_LOGS = 50
+
+
+def log_policy(
+    error_filter: Optional[ErrorFilter],
+    describe: Describer,
+    max_logs: Optional[int] = DEFAULT_MAX_LOGS,
+) -> OnError:
+    """Re-raise if ``error_filter(exc)`` (default :func:`is_recoverable`);
+    else log ``describe(args, exc)`` — the describe family's message,
+    ``Cannot process v`` / ``Cannot process ('k', 'v')``
+    (``ErrorLoggingValueMapper.java:98``, ``ErrorLoggingKeyValueMapper.java:100``)
+    — and return a drop payload.  The record's error row is filtered out
+    at once, so the payload skips the traceback rendering.
+
+    Logs are rate-limited: the first ``max_logs`` failures, then one
+    suppression notice (``None`` logs all).  The counter lives in the
+    pickled policy, so it is per Python worker — a bounded number of
+    processes, hence a bounded log volume at any SF."""
+    flt = error_filter or is_recoverable
+    state = {"n": 0}
+
+    def on_error(args, exc):
+        if flt(exc):
+            raise exc
+        state["n"] += 1
+        if max_logs is None or state["n"] <= max_logs:
+            logger.error("%s", describe(args, exc), exc_info=exc)
+        elif state["n"] == max_logs + 1:
+            logger.error(
+                "Suppressing further 'Cannot process' logs in this worker "
+                "(max_logs=%d reached); dropped-record totals remain available "
+                "via the observe metric",
+                max_logs,
+            )
+        return {
+            "input_value": None,
+            "error_class": type(exc).__name__,
+            "message": None,
+            "stack_trace": None,
+        }
+
+    return on_error
+
 
 def log_errors(
     fn: Callable[..., Any],
     error_filter: Optional[ErrorFilter] = None,
     with_key: bool = False,
 ):
-    """Wrap a plain callable with reference log-and-signal semantics.
+    """Wrap a plain callable with the reference's log-and-signal semantics:
+    a recoverable error re-raises unlogged; any other is logged with the
+    describe message, then re-raised.  The ``log_*`` transforms do not use
+    it: they log through :func:`log_policy` and drop the record instead."""
+    log = log_policy(error_filter, column_message(with_key), max_logs=None)
 
-    Returns a callable that re-raises recoverable errors and raises a
-    sentinel-captured path otherwise; used internally by the ``log_*``
-    DataFrame transforms (which capture, log, and filter).
-    """
-    flt = error_filter or is_recoverable
+    def on_error(args, exc):
+        log(args, exc)
+        raise exc
 
-    def _wrapped(*args):
-        try:
-            return fn(*args)
-        except Exception as exc:  # noqa: BLE001
-            if flt(exc):
-                raise
-            if with_key and len(args) >= 2:
-                # message contract: ``ErrorLoggingKeyValueMapper.java:100``
-                logger.error(
-                    "Cannot process ('%s', '%s')",
-                    _render_for_message(args[0]),
-                    _render_for_message(args[-1]),
-                    exc_info=exc,
-                )
-            else:
-                # ``ErrorLoggingValueMapper.java:98``
-                logger.error(
-                    "Cannot process %s", _render_for_message(args[-1]), exc_info=exc
-                )
-            raise
-
-    return _wrapped
-
-
-DEFAULT_MAX_LOGS = 50
-
-
-def _should_log(state: dict, max_logs: Optional[int]) -> bool:
-    """Per-worker rate limiter: True for the first ``max_logs`` failures;
-    emits one suppression notice on the first skipped log.  The closure
-    state lives in the pickled UDF, so the counter is per Python worker —
-    a bounded number of processes, hence a bounded log volume at any SF."""
-    state["n"] += 1
-    if max_logs is None or state["n"] <= max_logs:
-        return True
-    if state["n"] == max_logs + 1:
-        logger.error(
-            "Suppressing further 'Cannot process' logs in this worker "
-            "(max_logs=%d reached); dropped-record totals remain available "
-            "via the observe metric",
-            max_logs,
-        )
-    return False
-
-
-def _logging_fn(
-    fn, with_key: bool, flt: ErrorFilter, max_logs: Optional[int] = DEFAULT_MAX_LOGS
-):
-    """Capture-flavored fn that logs before letting capture swallow the row."""
-    state = {"n": 0}
-
-    def _inner(*args):
-        try:
-            return fn(*args)
-        except Exception as exc:  # noqa: BLE001
-            if not flt(exc) and _should_log(state, max_logs):
-                if with_key and len(args) >= 2:
-                    logger.error(
-                        "Cannot process ('%s', '%s')",
-                        _render_for_message(args[0]),
-                        _render_for_message(args[-1]),
-                        exc_info=exc,
-                    )
-                else:
-                    logger.error(
-                        "Cannot process %s", _render_for_message(args[-1]), exc_info=exc
-                    )
-            raise
-
-    return _inner
+    return lambda *args: call_once(fn, args, on_error)
 
 
 def _drop_errors(processed: DataFrame, processed_col: str, observe: bool) -> DataFrame:
@@ -164,6 +143,13 @@ def _observe_drops(df: DataFrame, is_error: Column) -> DataFrame:
     )
 
 
+def _log_records(df, fn, result_type, in_cols, error_filter, observe, max_logs):
+    """A ``log_*`` column shape: capture-shaped under the log policy, then
+    the error rows dropped (and counted)."""
+    on_error = log_policy(error_filter, column_message(len(in_cols) > 1), max_logs)
+    return _drop_errors(C.apply_records(df, fn, result_type, in_cols, on_error, "r"), "r", observe)
+
+
 def log_map_values(
     df: DataFrame,
     fn: Callable[[Any], Any],
@@ -174,11 +160,7 @@ def log_map_values(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingValueMapper.logErrors`` (``ErrorLoggingValueMapper.java:62,89-100``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_map_values(
-        df, _logging_fn(fn, False, flt, max_logs), result_type, value_col, flt, full_payload=False
-    )
-    return _drop_errors(p, "r", observe)
+    return _log_records(df, fn, result_type, [value_col], error_filter, observe, max_logs)
 
 
 def log_map_values_with_key(
@@ -192,12 +174,9 @@ def log_map_values_with_key(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingValueMapperWithKey`` (``ErrorLoggingValueMapperWithKey.java:64,92-103``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_map_values_with_key(
-        df, _logging_fn(fn, True, flt, max_logs), result_type, key_col, value_col, flt,
-        full_payload=False,
+    return _log_records(
+        df, fn, result_type, [key_col, value_col], error_filter, observe, max_logs
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_map(
@@ -212,12 +191,10 @@ def log_map(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingKeyValueMapper`` (``ErrorLoggingKeyValueMapper.java:64,92-103``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_map(
-        df, _logging_fn(fn, True, flt, max_logs), key_type, value_type, key_col, value_col, flt,
-        full_payload=False,
+    return _log_records(
+        df, C.pair_result(fn), C.kv_struct_type(key_type, value_type),
+        [key_col, value_col], error_filter, observe, max_logs,
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_flat_map_values(
@@ -230,12 +207,10 @@ def log_flat_map_values(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingFlatValueMapper`` (``ErrorLoggingFlatValueMapper.java:61,88-98``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_flat_map_values(
-        df, _logging_fn(fn, False, flt, max_logs), element_type, value_col, flt,
-        full_payload=False,
+    return _log_records(
+        df, C.list_result(fn), ArrayType(element_type), [value_col],
+        error_filter, observe, max_logs,
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_flat_map_values_with_key(
@@ -249,12 +224,10 @@ def log_flat_map_values_with_key(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingFlatValueMapperWithKey`` (``...WithKey.java:63,91-101``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_flat_map_values_with_key(
-        df, _logging_fn(fn, True, flt, max_logs), element_type, key_col, value_col, flt,
-        full_payload=False,
+    return _log_records(
+        df, C.list_result(fn), ArrayType(element_type), [key_col, value_col],
+        error_filter, observe, max_logs,
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_flat_map(
@@ -269,12 +242,18 @@ def log_flat_map(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingFlatKeyValueMapper`` (``ErrorLoggingFlatKeyValueMapper.java:63,91-101``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_flat_map(
-        df, _logging_fn(fn, True, flt, max_logs), key_type, value_type, key_col, value_col, flt,
-        full_payload=False,
+    return _log_records(
+        df, C.pair_list_result(fn), ArrayType(C.kv_struct_type(key_type, value_type)),
+        [key_col, value_col], error_filter, observe, max_logs,
     )
-    return _drop_errors(p, "r", observe)
+
+
+def _drop_error_rows(p: DataFrame) -> DataFrame:
+    # processor shapes emit a top-level error column, so the drop metric is
+    # the flat-column variant of _drop_errors (ADVICE r1: drops must stay
+    # counted once per-worker max_logs suppression kicks in)
+    p = _observe_drops(p, F.col(C.ERROR_COL).isNotNull())
+    return p.filter(F.col(C.ERROR_COL).isNull()).drop(C.ERROR_COL)
 
 
 def log_process(
@@ -287,28 +266,13 @@ def log_process(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingProcessor`` (``ErrorLoggingProcessor.java:68,157-167``):
-    mapInPandas wrapper, exception → log + skip row.  Also covers the legacy
-    ``ErrorLoggingFlatValueTransformer(WithKey)`` shapes
+    ``mapInArrow`` wrapper, exception → log + skip row.  Also covers the
+    legacy ``ErrorLoggingFlatValueTransformer(WithKey)`` shapes
     (``ErrorLoggingFlatValueTransformer.java:65,148-158``) — same semantics,
     legacy API surface.
     """
-    flt = error_filter or is_recoverable
-    state = {"n": 0}
-
-    def _proc(rec):
-        try:
-            return processor(rec)
-        except Exception as exc:  # noqa: BLE001
-            if not flt(exc) and _should_log(state, max_logs):
-                logger.error("Cannot process %s", rec, exc_info=exc)
-            raise
-
-    p = C.capture_process(df, _proc, result_type, flt, pass_through, input_value_col)
-    # processor shapes emit a top-level error column, so the drop metric is
-    # the flat-column variant of _drop_errors (ADVICE r1: drops must stay
-    # counted once per-worker max_logs suppression kicks in)
-    p = _observe_drops(p, F.col(C.ERROR_COL).isNotNull())
-    return p.filter(F.col(C.ERROR_COL).isNull()).drop(C.ERROR_COL)
+    on_error = log_policy(error_filter, record_message(input_value_col or df.columns[-1]), max_logs)
+    return _drop_error_rows(process_records(df, processor, result_type, on_error, pass_through))
 
 
 def log_process_values(
@@ -321,22 +285,8 @@ def log_process_values(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingValueProcessor`` (``ErrorLoggingValueProcessor.java:66,152-162``)."""
-    flt = error_filter or is_recoverable
-    state = {"n": 0}
-
-    def _proc(rec):
-        try:
-            return processor(rec)
-        except Exception as exc:  # noqa: BLE001
-            if not flt(exc) and _should_log(state, max_logs):
-                logger.error("Cannot process %s", rec, exc_info=exc)
-            raise
-
-    p = C.capture_process_values(
-        df, _proc, result_type, flt, pass_through, input_value_col
-    )
-    p = _observe_drops(p, F.col(C.ERROR_COL).isNotNull())
-    return p.filter(F.col(C.ERROR_COL).isNull()).drop(C.ERROR_COL)
+    on_error = log_policy(error_filter, record_message(input_value_col or df.columns[-1]), max_logs)
+    return _drop_error_rows(C.process_values(df, processor, result_type, on_error, pass_through))
 
 
 # ---------------------------------------------------------------------------

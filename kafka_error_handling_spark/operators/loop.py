@@ -1,0 +1,191 @@
+"""The one per-record loop behind the capture, log and describe families.
+
+Every decorator in ``operators/`` calls the wrapped function through
+:func:`run_records`: once per record, inside one ``try``.  A failure goes
+to the family's ``on_error(args, exc)`` policy, which re-raises or returns
+the record's error payload — the per-record wrapper of the reference
+(``ErrorCapturingValueMapper.java:86-95``, ``ErrorLoggingValueMapper.java:89-100``,
+``ErrorDescribingValueMapper.java:63-69``).  Exceptions that are not
+``Exception`` (``KeyboardInterrupt``, ``SystemExit``, … — the analog of Java
+``Error``) are never caught.
+
+Two Arrow transports feed the loop, with no pandas in between:
+
+- :func:`column_udf` — a nondeterministic ``arrow_udf`` for the map /
+  flatMap shapes;
+- :func:`process_records` — ``mapInArrow`` for the processor shapes.
+
+Input contract, the same for every family (the reference hands nulls
+through as themselves, ``SuccessValue.java:49-51``): SQL NULL reaches the
+function as ``None`` and NaN as ``nan`` (``pa.Array.to_pylist``); a
+timestamp as a naive ``datetime`` holding its wall-clock time in the
+session time zone; a map as a ``dict``.  On the way out :func:`to_arrow`
+reads a naive ``datetime`` the same way, and a struct result may be a
+dict (by field name) or a tuple (by position).
+"""
+
+from __future__ import annotations
+
+from typing import Any, Callable, Optional, Sequence
+
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from ..model import ERROR_SCHEMA, processed_schema
+
+# Column names of the ProcessedValue analog.
+RESULT_COL = "result"
+ERROR_COL = "error"
+
+OnError = Callable[[tuple, Exception], Optional[dict]]
+
+
+def run_records(fn: Callable[..., Any], rows: Sequence[tuple], on_error: OnError):
+    """``fn(*args)`` once per row → ``(results, errors)``; a failed row has
+    result ``None`` and error ``on_error(args, exc)`` (which may raise)."""
+    results = [None] * len(rows)
+    errors = [None] * len(rows)
+    for i, args in enumerate(rows):
+        try:
+            results[i] = fn(*args)
+        except Exception as exc:  # noqa: BLE001 — Throwables pass through untouched
+            errors[i] = on_error(args, exc)
+    return results, errors
+
+
+def call_once(fn: Callable[..., Any], args: tuple, on_error: OnError) -> Any:
+    """One call through the loop, for the plain-callable wrappers (their
+    policies always raise, so a returned value is the function's)."""
+    return run_records(fn, [args], on_error)[0][0]
+
+
+def py_columns(arrays: Sequence[pa.Array]) -> list:
+    """Arrow columns → Python lists under the input contract above."""
+    out = []
+    for a in arrays:
+        if pa.types.is_timestamp(a.type) and a.type.tz is not None:
+            a = pc.local_timestamp(a)
+        values = a.to_pylist()
+        if pa.types.is_map(a.type):
+            values = [None if m is None else dict(m) for m in values]
+        out.append(values)
+    return out
+
+
+def to_arrow(values: list, dtype: DataType, tz: str) -> pa.Array:
+    """Python results → the Arrow array Spark expects for ``dtype``."""
+    if isinstance(dtype, StructType):
+        columns = [
+            [None if v is None else v.get(f.name) if isinstance(v, dict) else v[i] for v in values]
+            for i, f in enumerate(dtype.fields)
+        ]
+        return _struct(columns, dtype, tz, mask=pa.array([v is None for v in values], pa.bool_()))
+    if isinstance(dtype, ArrayType):
+        offsets, flat = [0], []
+        for v in values:
+            if v is not None:
+                flat.extend(v)
+            offsets.append(len(flat))
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()),
+            to_arrow(flat, dtype.elementType, tz),
+            mask=pa.array([v is None for v in values], pa.bool_()),
+        )
+    if isinstance(dtype, TimestampType):
+        wall = pa.array(values, pa.timestamp("us"))
+        local = pc.assume_timezone(wall, tz, ambiguous="earliest", nonexistent="earliest")
+        return local.cast(to_arrow_type(dtype))
+    return pa.array(values, to_arrow_type(dtype))
+
+
+def _struct(columns: list, dtype: StructType, tz: str, mask=None) -> pa.StructArray:
+    children = [to_arrow(c, f.dataType, tz) for c, f in zip(columns, dtype.fields)]
+    return pa.StructArray.from_arrays(children, fields=list(to_arrow_type(dtype)), mask=mask)
+
+
+def column_udf(
+    fn: Callable[..., Any],
+    result_type: DataType,
+    on_error: OnError,
+    with_error: bool = True,
+):
+    """The map/flatMap transport: a nondeterministic ``arrow_udf`` over the
+    input columns returning ``struct<result, error>`` (or just the result
+    when ``with_error`` is false).  Nondeterministic so Catalyst never
+    duplicates it into both branches of a split: the function runs exactly
+    once per record (SURVEY.md §4)."""
+    if not callable(fn):
+        # build-time contract: the reference throws NPE from the factory on
+        # null args (ErrorCapturingKeyValueMapperTopologyTest.java:79-91)
+        raise TypeError(f"wrapped function must be callable, got {type(fn).__name__}")
+    if isinstance(result_type, str):
+        result_type = DataType.fromDDL(result_type)
+    out_type = processed_schema(result_type) if with_error else result_type
+    tz = SparkSession.active().conf.get("spark.sql.session.timeZone")
+
+    def _records(*cols: pa.Array) -> pa.Array:
+        results, errors = run_records(fn, list(zip(*py_columns(cols))), on_error)
+        if with_error:
+            return _struct([results, errors], out_type, tz)
+        return to_arrow(results, out_type, tz)
+
+    return arrow_udf(_records, out_type).asNondeterministic()
+
+
+def process_records(
+    df: DataFrame,
+    processor: Callable[[dict], Any],
+    result_type: DataType,
+    on_error: OnError,
+    pass_through: Optional[Sequence[str]] = None,
+    with_error: bool = True,
+) -> DataFrame:
+    """The processor transport: ``mapInArrow`` calling ``processor(row_dict)``
+    once per row.  It may forward 0..n results (the analog of
+    ``context.forward``, ``ErrorCapturingApiProcessorContext.java:31-59``);
+    each becomes one output row with a NULL error, and a failed row becomes
+    one row with a NULL result.  Output: the ``pass_through`` columns
+    (default: all), taken from the input batch as they are, + ``result`` +
+    ``error`` (when ``with_error``)."""
+    keep = list(pass_through) if pass_through is not None else list(df.columns)
+    fields = [df.schema[c] for c in keep] + [StructField(RESULT_COL, result_type, True)]
+    if with_error:
+        fields.append(StructField(ERROR_COL, ERROR_SCHEMA, True))
+    out_schema = StructType(fields)
+    arrow_schema = to_arrow_schema(out_schema)
+    names = list(df.columns)
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+
+    def forwards(rec):
+        return list(processor(rec) or ())
+
+    def _map(batches):
+        for batch in batches:
+            recs = [(dict(zip(names, row)),) for row in zip(*py_columns(batch.columns))]
+            results, errors = run_records(forwards, recs, on_error)
+            src, out, errs = [], [], []
+            for i, (fwds, err) in enumerate(zip(results, errors)):
+                for fwd in [None] if err is not None else fwds:
+                    src.append(i)
+                    out.append(fwd)
+                    errs.append(err)
+            take = pa.array(src, pa.int64())
+            cols = [batch.column(c).take(take) for c in keep]
+            cols.append(to_arrow(out, result_type, tz))
+            if with_error:
+                cols.append(to_arrow(errs, ERROR_SCHEMA, tz))
+            cols = [c.cast(f.type) for c, f in zip(cols, arrow_schema)]
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    return df.mapInArrow(_map, out_schema)

@@ -1,8 +1,9 @@
 """Correctness-gate queries exercising the error-handling decorator matrix.
 
-Each query runs the real Arrow-batched capture path (pandas UDF, per-row
-loop) with a *deterministically* failing user function, so a plain-SQL
-oracle can predict exactly which rows land in the success branch vs the
+Each query runs the real Arrow-batched capture path (``arrow_udf`` /
+``mapInArrow`` around the shared per-record loop) with a
+*deterministically* failing user function, so a plain-SQL oracle can
+predict exactly which rows land in the success branch vs the
 dead-letter branch — this is how the engine's novel semantics (SURVEY.md
 §2.1-2.4) get oracle-checked, not just unit-tested.
 """
@@ -231,7 +232,7 @@ def _fanout_processor(rec: dict):
 
 def q_capture_process_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """captureErrors over the multi-forward process shape
-    (ErrorCapturingProcessor via mapInPandas): 1..n forwards per record."""
+    (ErrorCapturingProcessor via mapInArrow): 1..n forwards per record."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     from ..operators import capture_process
@@ -328,17 +329,16 @@ FROM events WHERE event_type = 'error'
 
 
 def _value_band(v: float):
-    # struct-result mapper: the ErrorDescribingKeyValueMapper parity shape
-    # whose pandas-UDF return path ADVICE r1 found broken (pd.DataFrame
-    # required for StructType returns) — gate-pinned here, not just pytest
+    # struct-result mapper: the ErrorDescribingKeyValueMapper parity shape,
+    # returned as a dict — gate-pinned here, not just pytest
     return {"lo": round(v * 0.9, 4), "hi": round(v * 1.1, 4)}
 
 
 def q_describe_struct_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     """describeErrors with a struct<lo,hi> result type: the success path
     must emit the struct fields exactly (type-transparent contract over a
-    composite result — `operators/describe.py` builds a pd.DataFrame for
-    StructType returns)."""
+    composite result — the shared builder in `operators/loop.py` takes
+    dict or tuple struct results)."""
     from pyspark.sql.types import StructField, StructType
 
     from ..operators import describe_map_values

@@ -34,7 +34,7 @@ timezones — Spark parses the string in the session TZ and the pandas
 encoder receives the session-local wall time back (Arrow re-localizes),
 so it encodes the same epoch the DuckDB oracle derives from the same
 literal parsed as UTC.  Pinned empirically by the TZ=America/New_York
-perturbation sweep (runs/sweeps.json `tz`), which runs both gates.
+perturbation sweep (artifacts/sweeps.json `tz`), which runs both gates.
 """
 
 from __future__ import annotations

@@ -7,6 +7,8 @@ topology-test assertions (SURVEY.md §5):
   (ErrorLoggingValueMapperTopologyTest et al.), drop counts observable
 """
 
+import logging
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -91,6 +93,29 @@ def test_describe_process_multi_forward_and_enrich(spark):
 # --- logging family -------------------------------------------------------
 
 
+def test_log_errors_plain_wrapper_message_contract(caplog):
+    """log_errors logs the describe family's message, then re-raises the
+    original error; a recoverable error re-raises unlogged."""
+
+    def parse(*args):
+        if args[-1] == "infra":
+            raise TimeoutError("transient")
+        return int(args[-1])
+
+    with caplog.at_level(logging.ERROR, logger="kafka_error_handling_spark"):
+        with pytest.raises(ValueError):
+            keh.log_errors(parse)("xx")
+        with pytest.raises(ValueError):
+            keh.log_errors(parse, with_key=True)(7, "yy")
+        with pytest.raises(TimeoutError):
+            keh.log_errors(parse)("infra")
+        assert keh.log_errors(parse)("5") == 5
+    assert [r.getMessage() for r in caplog.records] == [
+        "Cannot process xx",
+        "Cannot process ('7', 'yy')",
+    ]
+
+
 def test_log_map_values_drops_and_keeps(spark):
     df = kv_df(spark, [(1, "1"), (2, "x"), (3, "3")])
     out = keh.log_map_values(df, lambda v: int(v), IntegerType(), observe=False)
@@ -163,8 +188,7 @@ def test_log_process_values(spark):
 
 def test_describe_struct_result_happy_and_fail(spark):
     """ErrorDescribingKeyValueMapper parity shape: struct<key,value> results
-    must work for every row (ADVICE r1: struct returns need a pd.DataFrame,
-    not a pd.Series, inside the pandas UDF)."""
+    must work for every row, returned as tuples (ADVICE r1)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     kv_type = StructType(

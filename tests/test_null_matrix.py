@@ -2,10 +2,21 @@
 assertion coverage (SURVEY.md §5: null key/value inputs, null results,
 error-on-null, null factory args → NPE analog)."""
 
+import datetime
+import math
+
 import pytest
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 import kafka_error_handling_spark as keh
 from kafka_error_handling_spark.model import render_value
@@ -90,3 +101,75 @@ def test_struct_input_rendered_as_json_in_dlq(spark):
     )
     e = keh.errors(p).collect()[0]
     assert e.error.input_value == '{"a":7}'
+
+
+# --- input contract: every family, both shapes, the same input ------------
+#
+# The reference hands null keys and values to the user function as
+# themselves (SuccessValue.java:49-51).  Capture, log and describe, column
+# and processor shapes, must all pass SQL NULL as None, NaN as nan and a
+# timestamp as a naive datetime in the session time zone, and must accept
+# a struct result as a dict (by name) or a tuple (by position).
+
+_WALL = datetime.datetime(2024, 1, 2, 3, 4, 5)
+_INPUTS = {
+    "d": (DoubleType(), [(1, 1.5), (None, None), (3, math.nan)]),
+    "ts": (TimestampType(), [(1, _WALL), (None, None), (3, _WALL)]),
+}
+
+
+@pytest.fixture
+def new_york(spark):
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    yield spark
+    spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def _through(family, shape, df, fn, result_type, col):
+    """Run ``fn(key, value)`` over ``df`` through one family and shape;
+    the frame's ``result`` column holds what it returned."""
+    if shape == "column":
+        if family == "capture":
+            return keh.values(keh.capture_map_values_with_key(df, fn, result_type, value_col=col))
+        if family == "log":
+            return keh.log_map_values_with_key(df, fn, result_type, value_col=col, observe=False)
+        return keh.describe_map_values_with_key(df, fn, result_type, value_col=col)
+
+    def proc(rec):
+        return [fn(rec["key"], rec[col])]
+
+    if family == "capture":
+        return keh.capture_process(df, proc, result_type).filter(F.col("error").isNull())
+    if family == "log":
+        return keh.log_process(df, proc, result_type)
+    return keh.describe_process(df, proc, result_type)
+
+
+@pytest.mark.parametrize("result_form", ["dict", "tuple"])
+@pytest.mark.parametrize("col", sorted(_INPUTS))
+@pytest.mark.parametrize("shape", ["column", "processor"])
+@pytest.mark.parametrize("family", ["capture", "log", "describe"])
+def test_input_contract(new_york, family, shape, col, result_form):
+    spark = new_york
+    # the literal is New York wall-clock time, as the session reads it
+    df = spark.sql(
+        "SELECT id, key, CAST(d AS DOUBLE) AS d,"
+        " IF(id = 1, NULL, TIMESTAMP'2024-01-02 03:04:05') AS ts"
+        " FROM VALUES (0, 1, '1.5'), (1, NULL, NULL), (2, 3, 'NaN') AS t(id, key, d)"
+    )
+    value_type, expected = _INPUTS[col]
+    result_type = StructType(
+        [StructField("seen", StringType()), StructField("echo", value_type)]
+    )
+
+    def fn(k, v):
+        seen = repr((k, v))
+        return (seen, v) if result_form == "tuple" else {"seen": seen, "echo": v}
+
+    out = _through(family, shape, df, fn, result_type, col)
+    rows = out.orderBy("id").select(
+        "result.seen", F.col("result.echo").eqNullSafe(F.col(col)).alias("same")
+    ).collect()
+    assert [r.seen for r in rows] == [repr(e) for e in expected]
+    assert all(r.same for r in rows)

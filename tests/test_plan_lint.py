@@ -1,7 +1,7 @@
 """Plan-hygiene gate: no CartesianProduct / row-at-a-time Python UDF.
 
 ``tools/plan_lint.py`` lints all 227 registry plans (artifact:
-``runs/plan_lint.json``); this test keeps a fast cross-family subset in
+``artifacts/plan_lint.json``); this test keeps a fast cross-family subset in
 the pytest loop so a regression (a join losing its broadcast wrap, a
 ``F.udf`` slipping into a hot path) fails CI before the full lint runs.
 """
@@ -16,7 +16,7 @@ sys.path.insert(0, os.path.join(_REPO, "tools"))
 
 from plan_lint import lint_plan, plan_string  # noqa: E402
 
-# registry-wide totals from the committed runs/plan_lint.json artifact
+# registry-wide totals from the committed artifacts/plan_lint.json
 # (sf0.001, dual-sweep lint).  33 Arrow-Python operators = the capture
 # family + the two BLAS paths, exactly; 424 shuffle exchanges across 233
 # plans (r9: +4 from search_rerank_cross — the reranker re-derives the
@@ -169,7 +169,7 @@ def test_sweeps_closing_gate_covers_whole_registry():
     """VERDICT r9 #2: the registry-wide perturbation sweeps must run on
     the FINAL tree — r9's strategy sweeps ran at 232 queries before the
     last operator landed.  ``tools/run_sweeps.py`` records its counts in
-    ``runs/sweeps.json``; this pin fails when any sweep is missing, red,
+    ``artifacts/sweeps.json``; this pin fails when any sweep is missing, red,
     or was run against a smaller registry than the live one (the same
     stale-artifact forcing function as plan_lint.json)."""
     import json
@@ -177,7 +177,7 @@ def test_sweeps_closing_gate_covers_whole_registry():
     import __spark_entry__ as entrymod
     from run_sweeps import SWEEPS
 
-    path = os.path.join(_REPO, "runs", "sweeps.json")
+    path = os.path.join(_REPO, "artifacts", "sweeps.json")
     assert os.path.exists(path), "run tools/run_sweeps.py to generate the artifact"
     data = json.load(open(path))
     live_n = len(entrymod.queries())
@@ -193,7 +193,7 @@ def test_sweeps_closing_gate_covers_whole_registry():
 
 def test_registry_wide_lint_totals_are_pinned():
     """VERDICT r6 item 5: the registry-WIDE lint totals, not just the
-    12-query subset, gate CI.  Reads the committed ``runs/plan_lint.json``
+    12-query subset, gate CI.  Reads the committed ``artifacts/plan_lint.json``
     artifact; a new query that silently adds a CartesianProduct or a
     row-at-a-time Python eval changes these totals and fails here before
     the next manual sweep.  The artifact must match the CURRENT registry
@@ -203,7 +203,7 @@ def test_registry_wide_lint_totals_are_pinned():
 
     import __spark_entry__ as entrymod
 
-    path = os.path.join(_REPO, "runs", "plan_lint.json")
+    path = os.path.join(_REPO, "artifacts", "plan_lint.json")
     assert os.path.exists(path), "run tools/plan_lint.py to regenerate the artifact"
     data = json.load(open(path))
     s = data["summary"]

@@ -9,7 +9,8 @@ are absent:
     scalar/tiny frame (every crossJoin site in the tree is one).
   * ``BatchEvalPython`` — a row-at-a-time Python UDF in the plan.  All
     Python execution here must ride Arrow batches (``ArrowEvalPython``,
-    ``MapInPandas``, ``FlatMapGroupsInPandas*``) or stay JVM-side.
+    ``MapInArrow``, ``MapInPandas``, ``FlatMapGroupsInPandas*``) or stay
+    JVM-side.
 
 Each query is planned TWICE (ADVICE r6 medium): once under the default
 ``autoBroadcastJoinThreshold`` — the stats/drift sweep, comparable with
@@ -34,7 +35,7 @@ count, parquet scans split by pushed-filter presence, whole-stage-codegen
 span count, and Arrow-batched Python operator count.
 
 Usage:  python tools/plan_lint.py [sf_dir] [query ...]
-Writes ``runs/plan_lint.json`` (one entry per query) and exits nonzero if
+Writes ``artifacts/plan_lint.json`` (one entry per query) and exits nonzero if
 any red flag is found in either sweep.  Mirrors the driver-checker
 session shape (``tools/check_correctness.py``) so linted plans match
 gated plans.
@@ -55,6 +56,7 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RED_NODES = ("CartesianProduct", "BatchEvalPython")
 ARROW_NODES = (
     "ArrowEvalPython",
+    "MapInArrow",
     "MapInPandas",
     "FlatMapGroupsInPandas",
     "FlatMapCoGroupsInPandas",
@@ -185,11 +187,11 @@ def main() -> None:
         "red_nobcast_flagged": sum(
             1 for r in results.values() if r.get("red_nobcast")
         ),
-        "sf_dir": sf_dir,
+        "sf_dir": os.path.basename(os.path.normpath(sf_dir)),
         "wall_s": round(time.time() - t_start, 1),
     }
-    os.makedirs(os.path.join(_ROOT, "runs"), exist_ok=True)
-    with open(os.path.join(_ROOT, "runs", "plan_lint.json"), "w") as f:
+    os.makedirs(os.path.join(_ROOT, "artifacts"), exist_ok=True)
+    with open(os.path.join(_ROOT, "artifacts", "plan_lint.json"), "w") as f:
         json.dump({"summary": summary, "plans": results}, f, indent=0, sort_keys=True)
     print(f"\n{json.dumps(summary)}")
     spark.stop()

@@ -4,7 +4,7 @@ VERDICT r9 #2: the r9 strategy sweeps ran at 232 queries before the last
 operator landed, so "final tree" and "registry-wide sweep" diverged.  This
 tool runs every invariance perturbation over the FULL current registry and
 records the counts plus the code fingerprint they were measured at in
-``runs/sweeps.json``; ``tests/test_plan_lint.py`` pins that artifact
+``artifacts/sweeps.json``; ``tests/test_plan_lint.py`` pins that artifact
 against the live registry size (the same stale-artifact forcing function
 as ``plan_lint.json`` — adding a query without re-running the sweeps fails
 CI loudly).
@@ -130,7 +130,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     registry_n = len(entrymod.queries())
-    out_path = os.path.join(_ROOT, "runs", "sweeps.json")
+    out_path = os.path.join(_ROOT, "artifacts", "sweeps.json")
     try:
         results = json.load(open(out_path)).get("sweeps", {})
     except Exception:
@@ -154,7 +154,7 @@ def main() -> None:
         print(f"{name}: {ok} ok, {fail} fail ({results[name]['wall_s']}s)")
 
     artifact = {
-        "sf_dir": sf_dir,
+        "sf_dir": os.path.basename(os.path.normpath(sf_dir)),
         "registry_n": registry_n,
         "code_tree": bench._code_fingerprint(_ROOT, "HEAD"),
         "date": time.strftime("%Y-%m-%d"),
