@@ -177,6 +177,18 @@ def _code_fingerprint(root: str, rev: str) -> str:
     return "-".join(ids)
 
 
+def _tree_fingerprint(root: str) -> str:
+    """:func:`_code_fingerprint` of HEAD, suffixed ``+dirty`` when the
+    working tree changes :data:`_CODE_PATHS` — the code a run measured."""
+    import subprocess
+
+    status = subprocess.run(
+        ["git", "status", "--porcelain", "--"] + list(_CODE_PATHS),
+        cwd=root, capture_output=True, text=True, timeout=30,
+    ).stdout.strip()
+    return _code_fingerprint(root, "HEAD") + ("+dirty" if status else "")
+
+
 def _newest_matching_record(paths: list, prev_tree: str):
     """Scan BENCH_r*.json newest-first for a calibration record whose code
     fingerprint matches ``prev_tree``.
@@ -289,12 +301,7 @@ def _calibration() -> dict | None:
         # FUTURE round can verify its re-timed commit is the same code
         # before dividing (ADVICE r8: a round whose bench failed to record
         # calibration would silently conflate code delta into host_drift)
-        calib["current_code_tree"] = _code_fingerprint(root, "HEAD")
-        if subprocess.run(
-            ["git", "status", "--porcelain", "--"] + list(_CODE_PATHS),
-            cwd=root, capture_output=True, text=True, timeout=30,
-        ).stdout.strip():
-            calib["current_code_tree"] += "+dirty"
+        calib["current_code_tree"] = _tree_fingerprint(root)
         if prev["total_s"] > 0:
             calib["code_ratio"] = round(cur["total_s"] / prev["total_s"], 3)
         # host drift: what did the previous round's bench RECORD for this

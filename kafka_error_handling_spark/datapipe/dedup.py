@@ -137,17 +137,6 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
-def _signature_cols(hs: Column):
-    """64 minhash components from a shingle-hash array: JVM-side
-    ``array_min(transform(...))`` folds — no second explode/shuffle."""
-    return [
-        F.array_min(
-            F.transform(hs, lambda h: (F.lit(_A[i]) * h + F.lit(_B[i])) % MH_PRIME)
-        ).alias(f"mh{i}")
-        for i in range(NUM_PERM)
-    ]
-
-
 def minhash_signature_from_hashes(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Signature from an (id, h) exploded hash frame: 64 ``min()`` partial
     aggregates in one codegen'd hash aggregate (interpreted higher-order

@@ -10,34 +10,36 @@ Two encode paths, dispatched at runtime (``to_avro_dead_letter``):
    the jar).  Fully JVM-side, matching the reference's
    ``AvroDeadLetterConverter.java:34-49`` cost profile — no Python in the
    encode hot path on DLQ-heavy runs.
-2. **Spec fallback** — spark-avro is not bundled in this container, so the
+2. **Spec fallback** — spark-avro does not ship with pyspark, so the
    fallback is a minimal, self-contained implementation of the *public*
    Avro binary encoding spec (zig-zag varint longs, length-prefixed UTF-8
-   strings, union branch indices) specialized to the DeadLetter schema —
-   ~60 lines, deterministic, round-trip tested by our own decoder, running
-   as an Arrow-batched pandas UDF.
+   strings, union branch indices) specialized to the DeadLetter schema,
+   round-trip tested by our own decoder.  It runs as one ``arrow_udf``
+   over the dead-letter struct, read leaf column by leaf column by
+   :func:`..functions.dead_letter.dead_letter_records`.
 
-Both paths write the same bytes: Avro binary encoding is fully determined
-by (schema, value) — no framing, no field tags — and the JVM path receives
-the struct re-projected into exact .avsc field order.  Field order:
+Both paths write the same bytes in any session time zone: Avro binary
+encoding is fully determined by (schema, value) — no framing, no field
+tags — the JVM path receives the struct re-projected into exact .avsc
+field order, and both write ``input_timestamp`` as the UTC instant in
+milliseconds that ``timestamp-millis`` requires (floored, like Spark's
+``microsToMillis``).  The fallback encodes a NULL struct to NULL.  Field
+order:
 
     input_value?, topic?, partition?, offset?, description,
     cause{error_class?, message?, stack_trace?}, input_timestamp?(millis)
-
-Runs as an Arrow-batched pandas UDF over the dead-letter struct column —
-encoding is per-row by nature; Arrow keeps the transfer vectorized.
 """
 
 from __future__ import annotations
 
 import json
+from datetime import datetime, timedelta
 from typing import Any, Optional
 
-import pandas as pd
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
 
-from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
+from ..functions.dead_letter import dead_letter_encoder, dead_letter_record
 
 __all__ = [
     "DEAD_LETTER_AVSC",
@@ -109,32 +111,30 @@ def _opt_long(v: Optional[int]) -> bytes:
     return _zigzag(0) if v is None else _zigzag(1) + _zigzag(int(v))
 
 
-def _denan(v):
-    """pandas null sentinels (NaN/NaT) → None (nullable ints arrive as NaN)."""
-    return None if v is None or v != v else v
+def _encode(
+    description, input_value, topic, partition, offset,
+    message, stack_trace, error_class, cause_is_null, input_us,
+) -> bytes:
+    """One flat dead-letter record → Avro binary, .avsc field order."""
+    return b"".join(
+        [
+            _opt_string(input_value),
+            _opt_string(topic),
+            _opt_long(partition),
+            _opt_long(offset),
+            _string(description),
+            _opt_string(error_class),
+            _opt_string(message),
+            _opt_string(stack_trace),
+            _opt_long(None if input_us is None else input_us // 1000),
+        ]
+    )
 
 
 def encode_dead_letter(d: dict) -> bytes:
-    """dict (DEAD_LETTER_SCHEMA shape) → Avro binary, .avsc field order."""
-    d = {k: _denan(v) for k, v in d.items()}
-    cause = {k: _denan(v) for k, v in (d.get("cause") or {}).items()}
-    ts = d.get("input_timestamp")
-    millis = None
-    if ts is not None:
-        millis = int(pd.Timestamp(ts).value // 1_000_000)
-    return b"".join(
-        [
-            _opt_string(d.get("input_value")),
-            _opt_string(d.get("topic")),
-            _opt_long(d.get("partition")),
-            _opt_long(d.get("offset")),
-            _string(d["description"]),
-            _opt_string(cause.get("error_class")),
-            _opt_string(cause.get("message")),
-            _opt_string(cause.get("stack_trace")),
-            _opt_long(millis),
-        ]
-    )
+    """dict (DEAD_LETTER_SCHEMA shape) → Avro binary; a naive
+    ``input_timestamp`` is read as UTC."""
+    return _encode(*dead_letter_record(d))
 
 
 def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
@@ -150,7 +150,8 @@ def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
 
 
 def decode_dead_letter(buf: bytes) -> dict:
-    """Inverse of :func:`encode_dead_letter` (round-trip testing / consumers)."""
+    """Inverse of :func:`encode_dead_letter` (round-trip testing / consumers);
+    ``input_timestamp`` comes back as a naive UTC ``datetime``."""
 
     def rd_opt_str(pos):
         branch, pos = _read_long(buf, pos)
@@ -174,14 +175,13 @@ def decode_dead_letter(buf: bytes) -> dict:
     n, pos = _read_long(buf, pos)
     out["description"] = buf[pos : pos + n].decode("utf-8")
     pos += n
-    cause = {}
+    out["cause"] = cause = {}
     cause["error_class"], pos = rd_opt_str(pos)
     cause["message"], pos = rd_opt_str(pos)
     cause["stack_trace"], pos = rd_opt_str(pos)
-    out["cause"] = cause
     millis, pos = rd_opt_long(pos)
     out["input_timestamp"] = (
-        None if millis is None else pd.Timestamp(millis, unit="ms")
+        None if millis is None else datetime(1970, 1, 1) + timedelta(milliseconds=millis)
     )
     return out
 
@@ -200,8 +200,6 @@ def jvm_avro_available(spark=None) -> bool:
         return _JVM_AVRO["ok"]
     _JVM_AVRO["checked"] = True
     try:
-        from pyspark.sql import SparkSession
-        from pyspark.sql import functions as F
         from pyspark.sql.avro.functions import to_avro as _probe_to_avro
 
         spark = spark or SparkSession.getActiveSession()
@@ -221,8 +219,6 @@ def _avsc_ordered(dead_letter: Column) -> Column:
     """Re-project the engine's dead-letter struct into exact .avsc field
     order (the engine struct leads with description/cause for readability;
     Avro binary encoding is positional)."""
-    from pyspark.sql import functions as F
-
     d = dead_letter
     return F.struct(
         d["input_value"].alias("input_value"),
@@ -244,7 +240,7 @@ def to_avro_dead_letter(dead_letter: Column, use_jvm: object = "auto") -> Column
     (the ``AvroDeadLetterConverter`` analog, ``AvroDeadLetterConverter.java:34-49``).
 
     ``use_jvm``: ``"auto"`` (default) uses the built-in JVM ``to_avro``
-    when the spark-avro module is loaded and the spec-encoder pandas UDF
+    when the spark-avro module is loaded and the spec-encoder ``arrow_udf``
     otherwise; ``True`` requires the JVM path (raises if unavailable);
     ``False`` forces the spec encoder (used by the cross-check test)."""
     if use_jvm is True or use_jvm == "auto":
@@ -258,15 +254,7 @@ def to_avro_dead_letter(dead_letter: Column, use_jvm: object = "auto") -> Column
                 "(add org.apache.spark:spark-avro to spark.jars.packages)"
             )
 
-    @pandas_udf(BinaryType())
-    def _enc(s: pd.DataFrame) -> pd.Series:
-        # struct columns arrive as a pd.DataFrame (one column per field)
-        recs = s.to_dict("records") if isinstance(s, pd.DataFrame) else list(s)
-        return pd.Series(
-            [None if d is None else encode_dead_letter(d) for d in recs]
-        )
-
-    return _enc(dead_letter)
+    return dead_letter_encoder(_encode)(dead_letter)
 
 
 # ---------------------------------------------------------------------------

@@ -11,23 +11,28 @@ with the reference's ``ProtoDeadLetter``
         google.protobuf.Timestamp input_timestamp = 7;
     }
 
-spark-protobuf isn't bundled here, so this encodes the *public* proto3 wire
-format directly (tag = field<<3 | wiretype; LEN-prefixed submessages;
-wrapper types = one-field messages).  Null handling mirrors
-``ProtoDeadLetterConverter.java:41-78``: absent optional fields are simply
-omitted (wrappers encode presence); proto3 default-suppression means an
-empty string description is zero bytes, matching any standard decoder.
+spark-protobuf does not ship with pyspark, so the fallback encodes the
+*public* proto3 wire format directly (tag = field<<3 | wiretype;
+LEN-prefixed submessages; wrapper types = one-field messages), as one
+``arrow_udf`` over the dead-letter struct read leaf column by leaf column
+by :func:`..functions.dead_letter.dead_letter_records`.  Null handling
+mirrors ``ProtoDeadLetterConverter.java:41-78``: absent optional fields
+are simply omitted (wrappers encode presence), the ``Cause`` submessage is
+written whenever the struct's ``cause`` is not NULL, and a NULL struct
+encodes to NULL; proto3 default-suppression means an empty string
+description is zero bytes, matching any standard decoder.
+``input_timestamp`` is written as the UTC instant (seconds and nanos since
+the epoch) in any session time zone.
 """
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
 from typing import Optional
 
-import pandas as pd
+from pyspark.sql import Column, SparkSession
 
-from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
+from ..functions.dead_letter import dead_letter_encoder, dead_letter_record
 
 __all__ = [
     "PROTO_DEAD_LETTER_SCHEMA",
@@ -88,57 +93,48 @@ def _string_value(s: str) -> bytes:
     return _len_field(1, raw) if raw else b""  # proto3 default suppression
 
 
-def _int_value(v: int) -> bytes:
-    """Int32Value/Int64Value: field 1, varint (two's-complement 64-bit for
-    negatives, per proto spec)."""
-    if v == 0:
-        return b""
-    return _tag(1, 0) + _varint(v & 0xFFFFFFFFFFFFFFFF)
+def _varint_field(field: int, v: int) -> bytes:
+    """A varint field (two's-complement 64-bit for negatives, per proto
+    spec); proto3 suppresses 0."""
+    return _tag(field, 0) + _varint(v & 0xFFFFFFFFFFFFFFFF) if v else b""
 
 
-def _timestamp(seconds: int, nanos: int) -> bytes:
+def _encode(
+    description, input_value, topic, partition, offset,
+    message, stack_trace, error_class, cause_is_null, input_us,
+) -> bytes:
+    """One flat dead-letter record → proto3 wire bytes, fields ascending."""
     out = b""
-    if seconds:
-        out += _tag(1, 0) + _varint(seconds & 0xFFFFFFFFFFFFFFFF)
-    if nanos:
-        out += _tag(2, 0) + _varint(nanos)
+    desc = (description or "").encode("utf-8")
+    if desc:
+        out += _len_field(1, desc)
+    if not cause_is_null:
+        cause = b""
+        if message is not None:
+            cause += _len_field(1, _string_value(message))
+        if stack_trace is not None:
+            cause += _len_field(2, _string_value(stack_trace))
+        if error_class is not None:
+            cause += _len_field(3, _string_value(error_class))
+        out += _len_field(2, cause)
+    if input_value is not None:
+        out += _len_field(3, _string_value(input_value))
+    if topic is not None:
+        out += _len_field(4, _string_value(topic))
+    if partition is not None:
+        out += _len_field(5, _varint_field(1, partition))  # Int32Value
+    if offset is not None:
+        out += _len_field(6, _varint_field(1, offset))  # Int64Value
+    if input_us is not None:
+        seconds, micros = divmod(input_us, 10**6)
+        out += _len_field(7, _varint_field(1, seconds) + _varint_field(2, micros * 1000))
     return out
-
-
-def _denan(v):
-    """pandas null sentinels (NaN/NaT) → None (nullable ints arrive as NaN)."""
-    return None if v is None or v != v else v
 
 
 def encode_proto_dead_letter(d: dict) -> bytes:
-    d = {k: _denan(v) for k, v in d.items()}
-    cause = {k: _denan(v) for k, v in (d.get("cause") or {}).items()}
-    out = b""
-    desc = (d.get("description") or "").encode("utf-8")
-    if desc:
-        out += _len_field(1, desc)
-    cause_payload = b""
-    if cause.get("message") is not None:
-        cause_payload += _len_field(1, _string_value(cause["message"]))
-    if cause.get("stack_trace") is not None:
-        cause_payload += _len_field(2, _string_value(cause["stack_trace"]))
-    if cause.get("error_class") is not None:
-        cause_payload += _len_field(3, _string_value(cause["error_class"]))
-    if cause_payload or cause:
-        out += _len_field(2, cause_payload)
-    if d.get("input_value") is not None:
-        out += _len_field(3, _string_value(d["input_value"]))
-    if d.get("topic") is not None:
-        out += _len_field(4, _string_value(d["topic"]))
-    if d.get("partition") is not None:
-        out += _len_field(5, _int_value(int(d["partition"])))
-    if d.get("offset") is not None:
-        out += _len_field(6, _int_value(int(d["offset"])))
-    ts = d.get("input_timestamp")
-    if ts is not None:
-        t = pd.Timestamp(ts)
-        out += _len_field(7, _timestamp(t.value // 1_000_000_000, t.value % 1_000_000_000))
-    return out
+    """dict (DEAD_LETTER_SCHEMA shape) → proto3 wire bytes; a naive
+    ``input_timestamp`` is read as UTC."""
+    return _encode(*dead_letter_record(d))
 
 
 def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
@@ -172,25 +168,22 @@ def _decode_fields(buf: bytes) -> dict[int, list]:
 def _get_wrapper_str(fields: dict, n: int) -> Optional[str]:
     if n not in fields:
         return None
-    inner = _decode_fields(fields[n][-1])
-    return inner.get(1, [b""])[-1].decode("utf-8") if 1 in inner else ""
+    return _decode_fields(fields[n][-1]).get(1, [b""])[-1].decode("utf-8")
 
 
 def _get_wrapper_int(fields: dict, n: int) -> Optional[int]:
     if n not in fields:
         return None
-    inner = _decode_fields(fields[n][-1])
-    v = inner.get(1, [0])[-1] if 1 in inner else 0
-    if v >= 1 << 63:
-        v -= 1 << 64
-    return v
+    v = _decode_fields(fields[n][-1]).get(1, [0])[-1]
+    return v - (1 << 64) if v >= 1 << 63 else v
 
 
 def decode_proto_dead_letter(buf: bytes) -> dict:
-    """Standard-decoder stand-in for round-trip tests."""
+    """Standard-decoder stand-in for round-trip tests; ``input_timestamp``
+    comes back as a naive UTC ``datetime``."""
     f = _decode_fields(buf)
     out = {
-        "description": f.get(1, [b""])[-1].decode("utf-8") if 1 in f else "",
+        "description": f.get(1, [b""])[-1].decode("utf-8"),
         "input_value": _get_wrapper_str(f, 3),
         "topic": _get_wrapper_str(f, 4),
         "partition": _get_wrapper_int(f, 5),
@@ -205,13 +198,12 @@ def decode_proto_dead_letter(buf: bytes) -> dict:
             "error_class": _get_wrapper_str(cf, 3),
         }
     out["cause"] = cause
+    out["input_timestamp"] = None
     if 7 in f:
         tf = _decode_fields(f[7][-1])
-        secs = tf.get(1, [0])[-1]
-        nanos = tf.get(2, [0])[-1]
-        out["input_timestamp"] = pd.Timestamp(secs * 1_000_000_000 + nanos)
-    else:
-        out["input_timestamp"] = None
+        out["input_timestamp"] = datetime(1970, 1, 1) + timedelta(
+            seconds=tf.get(1, [0])[-1], microseconds=tf.get(2, [0])[-1] // 1000
+        )
     return out
 
 
@@ -225,8 +217,6 @@ def jvm_protobuf_available(spark=None) -> bool:
         return _JVM_PROTO["ok"]
     _JVM_PROTO["checked"] = True
     try:
-        from pyspark.sql import SparkSession
-        from pyspark.sql import functions as F  # noqa: F401
         from pyspark.sql.protobuf.functions import to_protobuf  # noqa: F401
 
         spark = spark or SparkSession.getActiveSession()
@@ -264,12 +254,4 @@ def to_proto_dead_letter(
 
         return to_protobuf(dead_letter, message_name, desc_file_path)
 
-    @pandas_udf(BinaryType())
-    def _enc(s: pd.DataFrame) -> pd.Series:
-        # struct columns arrive as a pd.DataFrame (one column per field)
-        recs = s.to_dict("records") if isinstance(s, pd.DataFrame) else list(s)
-        return pd.Series(
-            [None if d is None else encode_proto_dead_letter(d) for d in recs]
-        )
-
-    return _enc(dead_letter)
+    return dead_letter_encoder(_encode)(dead_letter)

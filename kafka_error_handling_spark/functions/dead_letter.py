@@ -13,15 +13,22 @@ JVM-side, whole-stage-codegen friendly:
 
 Converters are ``Column → Column`` functions: identity keeps the struct,
 :mod:`..formats.avro_format` / :mod:`..formats.proto_format` render the
-byte-compatible Avro / proto3 encodings of the reference's schemas.
+byte-compatible Avro / proto3 encodings of the reference's schemas.  Their
+Python fallbacks share one reader of the struct (:func:`dead_letter_records`)
+and one ``arrow_udf`` transport (:func:`dead_letter_encoder`).
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from datetime import datetime, timedelta, timezone
+from typing import Callable, Optional
+
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import BinaryType
 
 from ..model import DEAD_LETTER_SCHEMA
 
@@ -31,6 +38,12 @@ __all__ = [
     "replay_dead_letters",
     "DEAD_LETTER_SCHEMA",
 ]
+
+# A dead letter as the encoders take it: the _TOP and _CAUSE fields, then
+# (cause_is_null, input_us) — input_us is the UTC instant in microseconds.
+_TOP = ("description", "input_value", "topic", "partition", "offset")
+_CAUSE = ("message", "stack_trace", "error_class")
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def dead_letter_struct(
@@ -140,3 +153,48 @@ def replay_dead_letters(
         processed_col=processed_col,
     )
     return out.drop(tmp)
+
+
+def dead_letter_record(d: dict) -> tuple:
+    """A dead-letter dict → the encoders' record; ``input_timestamp`` is a
+    ``datetime`` or an ISO string, read as UTC when naive."""
+    cause = d.get("cause") or {}
+    ts = d.get("input_timestamp")
+    if ts is not None:
+        ts = datetime.fromisoformat(ts) if isinstance(ts, str) else ts
+        ts = (ts if ts.tzinfo else ts.replace(tzinfo=timezone.utc)) - _EPOCH
+        ts //= timedelta(microseconds=1)
+    return (*map(d.get, _TOP), *map(cause.get, _CAUSE), not cause, ts)
+
+
+def _pylist(a: pa.Array) -> list:
+    """``a.to_pylist()`` for string, integer and boolean arrays, through
+    numpy: ``to_pylist`` boxes one Arrow scalar per value, 5-30x slower.
+    numpy turns a NULL string or boolean into ``None``, an integer into NaN."""
+    if not (a.null_count and pa.types.is_integer(a.type)):
+        return a.to_numpy(zero_copy_only=False).tolist()
+    valid = a.is_valid().to_numpy(zero_copy_only=False).tolist()
+    return [v if ok else None for v, ok in zip(a.fill_null(0).to_numpy().tolist(), valid)]
+
+
+def dead_letter_records(arr: pa.StructArray) -> list:
+    """A dead-letter struct column → one record per row (``None`` for a
+    NULL struct), read leaf column by leaf column; ``input_timestamp`` is
+    its int64 storage, UTC microseconds whatever the session time zone."""
+    cause = arr.field("cause")
+    cols = [_pylist(arr.field(n)) for n in _TOP]
+    cols += [_pylist(cause.field(n)) for n in _CAUSE]
+    cols.append(_pylist(cause.is_null()))
+    cols.append(_pylist(arr.field("input_timestamp").cast(pa.int64())))
+    return [None if n else r for n, r in zip(_pylist(arr.is_null()), zip(*cols))]
+
+
+def dead_letter_encoder(encode: Callable[..., bytes]):
+    """An ``arrow_udf`` writing ``encode(*record)`` per dead letter, NULL
+    for a NULL struct."""
+
+    def _encode(arr: pa.Array) -> pa.Array:
+        rows = dead_letter_records(arr)
+        return pa.array([None if r is None else encode(*r) for r in rows], pa.binary())
+
+    return arrow_udf(_encode, BinaryType())

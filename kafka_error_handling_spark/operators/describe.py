@@ -108,16 +108,9 @@ def describe_udf(
     The first failing record aborts the task with a ``ProcessingException``
     naming it (fail-fast is the point).  A struct ``result_type`` (the
     ``ErrorDescribingKeyValueMapper`` parity shape, where results are
-    ``struct<key, value>``) takes dict or tuple results, like every family;
-    a ``None`` result there is a struct of NULL fields, not a NULL struct.
+    ``struct<key, value>``) takes dict or tuple results, and a ``None``
+    result is a NULL struct, like every family.
     """
-    if isinstance(result_type, StructType):
-        struct_fn = fn
-
-        def fn(*args):
-            out = struct_fn(*args)
-            return {} if out is None else out
-
     return column_udf(fn, result_type, describe_policy(column_message(with_key)), with_error=False)
 
 

@@ -29,12 +29,10 @@ Fixture constraint: numeric fields are non-negative (negative zig-zag /
 two's-complement varints are covered by the pytest round-trips; keeping
 the SQL varint non-negative keeps the oracle readable).
 
-Timezone: the timestamp fixture is WALL-TIME-stable across session
-timezones — Spark parses the string in the session TZ and the pandas
-encoder receives the session-local wall time back (Arrow re-localizes),
-so it encodes the same epoch the DuckDB oracle derives from the same
-literal parsed as UTC.  Pinned empirically by the TZ=America/New_York
-perturbation sweep (artifacts/sweeps.json `tz`), which runs both gates.
+Timezone: the timestamp fixture is read as a UTC instant (the literal
+with a ``Z`` suffix), as the DuckDB oracle reads it, and both encoders
+write the UTC instant, so the gates hold in any session time zone (the
+TZ=America/New_York sweep in artifacts/sweeps.json `tz` runs both).
 """
 
 from __future__ import annotations
@@ -91,7 +89,7 @@ def _dead_letter_col():
         F.col("topic").alias("topic"),
         F.col("partition").alias("partition"),
         F.col("offset").alias("offset"),
-        F.col("ts_string").cast("timestamp").alias("input_timestamp"),
+        F.concat("ts_string", F.lit("Z")).cast("timestamp").alias("input_timestamp"),
     )
 
 

@@ -7,7 +7,8 @@ mirrors (§1.3): ``key binary, value binary, topic string, partition int,
 offset long, timestamp timestamp, headers array<struct<key,value>>``.
 
 No broker exists in this container, so these helpers only *assemble*
-readers/writers (option plumbing, serde edges) — they are exercised
+readers/writers (option plumbing; the captured serde edges are
+:mod:`.serde`) — they are exercised
 against in-memory frames shaped like the Kafka schema in tests, and are
 drop-in on a real cluster.
 """
@@ -35,7 +36,6 @@ __all__ = [
     "read_batch",
     "to_sink_frame",
     "write_stream",
-    "parse_json_value",
 ]
 
 # the Kafka source schema, the engine's canonical record shape
@@ -148,11 +148,3 @@ def write_stream(
         .option("checkpointLocation", checkpoint)
     )
 
-
-def parse_json_value(df: DataFrame, schema: StructType, value_col: str = "value") -> DataFrame:
-    """Serde edge: JSON bytes → typed struct (``from_json``); the Avro /
-    Protobuf edges use ``from_avro`` / ``from_protobuf`` where the
-    corresponding Spark modules are deployed."""
-    return df.withColumn(
-        "parsed", F.from_json(F.col(value_col).cast("string"), schema)
-    )

@@ -12,21 +12,27 @@ The Spark analog: wrap the user's per-record stateful function inside
 - a per-record exception is captured into the error column (or rethrown if
   recoverable) **without poisoning the group's state or the batch**.
 
+Each record goes through the shared per-record loop
+(:func:`..operators.loop.run_records`) under the capture family's policy,
+as ``capture_process`` does.
+
 Scale: state lives in the state store keyed by group — per-key partition
-parallel, no driver involvement; the wrapper adds one try/except per row.
+parallel, no driver involvement.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterable, Iterator, Optional, Tuple
+from typing import Callable, Iterable, Iterator, Optional, Tuple
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
-from ..model import ERROR_SCHEMA, ErrorFilter, error_payload, is_recoverable
+from ..model import ErrorFilter, processed_schema
+from ..operators.capture import capture_policy, record_value
+from ..operators.loop import run_records
 
 __all__ = ["capture_stateful_process"]
 
@@ -47,42 +53,34 @@ def capture_stateful_process(
     ``fn(key_tuple, row_dict, state)`` may read/update/remove ``state`` and
     forward 0..n result dicts.  Output rows: key columns + ``result``
     (nullable ``result_type`` struct) + ``error`` (nullable) — the
-    ``ProcessedKeyValue`` contract with state in the loop.
+    ``ProcessedKeyValue`` contract with state in the loop.  ``input_value``
+    renders ``input_value_col``, or the whole row when it is not given.
+
+    ``applyInPandasWithState`` is the only API that carries a
+    ``GroupState`` (there is no Arrow variant), so rows reach ``fn`` as
+    dicts of pandas values: a NULL numeric input arrives as NaN here, not
+    as ``None`` as in the other capture shapes, and an integer column with
+    a NULL in the frame arrives as floats.
     """
-    flt = error_filter or is_recoverable
-    ival = input_value_col
-    out_schema = StructType(
-        [df.schema[c] for c in key_cols]
-        + [
-            StructField("result", result_type, True),
-            StructField("error", ERROR_SCHEMA, True),
-        ]
-    )
+    if input_value_col:
+        on_error = capture_policy(error_filter, record_value(input_value_col))
+    else:  # the whole row: ``(row_dict,)``'s last argument
+        on_error = capture_policy(error_filter)
+    out_schema = StructType([df.schema[c] for c in key_cols] + processed_schema(result_type).fields)
 
     def _proc(
         key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        out_rows = []
-        base = dict(zip(key_cols, key))
-        for pdf in pdfs:
-            for rec in pdf.to_dict("records"):
-                try:
-                    forwards = fn(key, dict(rec), state)
-                except Exception as exc:  # noqa: BLE001
-                    if flt(exc):
-                        raise
-                    row = dict(base)
-                    row["result"] = None
-                    row["error"] = error_payload(
-                        rec.get(ival) if ival else rec, exc
-                    )
-                    out_rows.append(row)
-                    continue
-                for fwd in forwards or ():
-                    row = dict(base)
-                    row["result"] = fwd
-                    row["error"] = None
-                    out_rows.append(row)
+        def forwards(rec):
+            return list(fn(key, rec, state) or ())
+
+        recs = [(rec,) for pdf in pdfs for rec in pdf.to_dict("records")]
+        results, errors = run_records(forwards, recs, on_error)
+        out_rows = [
+            (*key, fwd, err)
+            for fwds, err in zip(results, errors)
+            for fwd in ([None] if err is not None else fwds)
+        ]
         yield pd.DataFrame(out_rows, columns=key_cols + ["result", "error"])
 
     return df.groupBy(*key_cols).applyInPandasWithState(

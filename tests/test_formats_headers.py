@@ -5,10 +5,14 @@ present/absent matrix (``AvroDeadLetterConverterTest.java:39-82``) and
 ``ErrorHeaderProcessorTest`` semantics.
 """
 
+from datetime import datetime, timedelta
+
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import IntegerType, StringType
 
 import kafka_error_handling_spark as keh
@@ -20,8 +24,14 @@ from kafka_error_handling_spark.formats.avro_format import (
 from kafka_error_handling_spark.formats.proto_format import (
     decode_proto_dead_letter,
     encode_proto_dead_letter,
+    to_proto_dead_letter,
 )
 from kafka_error_handling_spark.functions import headers as H
+from kafka_error_handling_spark.functions.dead_letter import (
+    DEAD_LETTER_SCHEMA,
+    dead_letter_record,
+    dead_letter_records,
+)
 
 FULL = {
     "description": "step failed",
@@ -101,6 +111,38 @@ def test_avro_column_converter(spark):
     assert decoded["description"] == "conv test"
     assert decoded["cause"]["error_class"] == "ValueError"
     assert decoded["input_value"] == "bad"
+    # a NULL dead letter encodes to NULL in both formats
+    null_dl = F.when(F.lit(False), keh.dead_letter_struct("conv test"))
+    row = keh.errors(p).select(
+        to_avro_dead_letter(null_dl, use_jvm=False).alias("avro"),
+        to_proto_dead_letter(null_dl).alias("proto"),
+    ).first()
+    assert row.avro is None and row.proto is None
+
+
+def test_fallbacks_write_the_utc_instant_in_any_session_zone(spark):
+    """Both fallback encoders write ``input_timestamp`` as the UTC instant
+    (``timestamp-millis`` / ``google.protobuf.Timestamp``), not the session
+    wall-clock time read as UTC."""
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = spark.sql(
+            "SELECT 1 AS key, 'bad' AS value, TIMESTAMP'2024-01-02 03:04:05' AS ts"
+        )
+        p = keh.capture_map_values(df, lambda v: int(v), IntegerType())
+        dlq = keh.dead_letters(keh.errors(p), "tz", key_cols=["ts"], timestamp_col="ts")
+        row = dlq.select(
+            F.unix_millis("ts").alias("ms"),
+            to_avro_dead_letter(F.col("dead_letter"), use_jvm=False).alias("avro"),
+            to_proto_dead_letter(F.col("dead_letter")).alias("proto"),
+        ).first()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert row.ms == 1704182645000
+    want = datetime(1970, 1, 1) + timedelta(milliseconds=row.ms)
+    assert decode_dead_letter(bytes(row.avro))["input_timestamp"] == want
+    assert decode_proto_dead_letter(bytes(row.proto))["input_timestamp"] == want
 
 
 def test_error_headers_attached_and_replaced(spark):
@@ -377,3 +419,13 @@ def test_proto_round_trip_property(rec):
     for k in ("input_value", "topic", "partition", "offset"):
         assert out[k] == rec[k], k
     assert out["input_timestamp"] == rec["input_timestamp"]
+
+
+@settings(max_examples=100, deadline=None)
+@given(recs=st.lists(st.one_of(st.none(), _dead_letters), max_size=20))
+def test_arrow_reader_matches_the_per_record_reader(recs):
+    """The fallbacks' column reader yields, row for row, what the
+    per-record encoders read from the same dead letters as dicts."""
+    arr = pa.array(recs, to_arrow_type(DEAD_LETTER_SCHEMA))
+    want = [None if d is None else dead_letter_record(d) for d in recs]
+    assert dead_letter_records(arr) == want

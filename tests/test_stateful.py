@@ -2,6 +2,8 @@
 decoration (the stores() pass-through contract,
 ``ErrorCapturingProcessor.java:140-143``)."""
 
+import pytest
+
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -145,3 +147,69 @@ def test_stateful_running_totals_match_batch_across_microbatches(spark, tmp_path
     errs = [r for r in rows if r["error"] is not None]
     assert len(errs) == 1 and errs[0]["user_id"] == 2
     assert errs[0]["error"]["error_class"] == "ValueError"
+
+
+def _run_stateful(spark, tmp_path, lines, fn, **kwargs):
+    """Drain ``lines`` (JSON, schema ``key int, value string``) through
+    ``capture_stateful_process`` keyed by ``key``; the output rows."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.json").write_text("".join(line + "\n" for line in lines))
+    stream = spark.readStream.schema("key int, value string").json(str(src))
+    out = capture_stateful_process(stream, ["key"], fn, RESULT_T, STATE_T, **kwargs)
+    rows = []
+    q = (
+        out.writeStream.foreachBatch(lambda df, bid: rows.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    return rows
+
+
+def test_stateful_recoverable_error_fails_the_query(spark, tmp_path):
+    """The shared capture policy re-raises what ``is_recoverable`` accepts:
+    the query fails instead of routing the record to the error column."""
+    from pyspark.errors import StreamingQueryException
+
+    def fn(key, rec, state):
+        raise ConnectionError("broker gone")
+
+    with pytest.raises(StreamingQueryException, match="ConnectionError"):
+        _run_stateful(spark, tmp_path, ['{"key": 1, "value": "a"}'], fn)
+
+
+def test_stateful_input_value_defaults_to_the_whole_row(spark, tmp_path):
+    def fn(key, rec, state):
+        raise ValueError("bad")
+
+    rows = _run_stateful(spark, tmp_path, ['{"key": 7, "value": "POISON"}'], fn)
+    assert len(rows) == 1 and rows[0].result is None
+    rendered = rows[0].error.input_value
+    assert "'key': 7" in rendered and "'value': 'POISON'" in rendered
+
+
+def test_stateful_generator_failure_is_that_records_error(spark, tmp_path):
+    """Forwards are listed inside the per-record loop: an exception raised
+    while iterating a generator ``fn`` is captured for that record, and
+    its partial forwards are dropped."""
+
+    def fn(key, rec, state):
+        yield {"value": rec["value"], "running_count": 1}
+        if rec["value"] == "POISON":
+            raise ValueError("mid-iteration")
+
+    rows = _run_stateful(
+        spark, tmp_path,
+        ['{"key": 1, "value": "a"}', '{"key": 2, "value": "POISON"}'],
+        fn, input_value_col="value",
+    )
+    ok = [(r.key, r.result.value) for r in rows if r.error is None]
+    errs = [(r.key, r.error.error_class, r.error.input_value) for r in rows if r.error is not None]
+    assert ok == [(1, "a")]
+    assert errs == [(2, "ValueError", "POISON")]
+    assert all(r.result is None for r in rows if r.error is not None)

@@ -156,7 +156,7 @@ def main() -> None:
     artifact = {
         "sf_dir": os.path.basename(os.path.normpath(sf_dir)),
         "registry_n": registry_n,
-        "code_tree": bench._code_fingerprint(_ROOT, "HEAD"),
+        "code_tree": bench._tree_fingerprint(_ROOT),
         "date": time.strftime("%Y-%m-%d"),
         "sweeps": results,
     }
