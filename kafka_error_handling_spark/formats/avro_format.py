@@ -14,17 +14,23 @@ Two encode paths, dispatched at runtime (``to_avro_dead_letter``):
    fallback is a minimal, self-contained implementation of the *public*
    Avro binary encoding spec (zig-zag varint longs, length-prefixed UTF-8
    strings, union branch indices) specialized to the DeadLetter schema,
-   round-trip tested by our own decoder.  It runs as one ``arrow_udf``
-   over the dead-letter struct, read leaf column by leaf column by
-   :func:`..functions.dead_letter.dead_letter_records`.
+   round-trip tested by our own decoder.  It is one Catalyst expression
+   (:func:`_avro_column`), so the DLQ write of a micro-batch starts no
+   Python worker: each such task costs 0.19-0.23 s of worker CPU before it
+   reads a row, far more than the encoding of a batch's dead letters.
+   The struct and the nine varint inputs are bound once each as lambda
+   variables, and the Column is built once per input expression
+   (:func:`..functions.dead_letter.built_once`).  :func:`encode_dead_letter`
+   is the per-record reference it is tested against.
 
 Both paths write the same bytes in any session time zone: Avro binary
 encoding is fully determined by (schema, value) — no framing, no field
 tags — the JVM path receives the struct re-projected into exact .avsc
 field order, and both write ``input_timestamp`` as the UTC instant in
 milliseconds that ``timestamp-millis`` requires (floored, like Spark's
-``microsToMillis``).  The fallback encodes a NULL struct to NULL.  Field
-order:
+``microsToMillis``).  The fallback encodes a NULL struct to NULL and
+fails the task on a NULL description, which the schema does not allow.
+Field order:
 
     input_value?, topic?, partition?, offset?, description,
     cause{error_class?, message?, stack_trace?}, input_timestamp?(millis)
@@ -39,7 +45,13 @@ from typing import Any, Optional
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dead_letter import dead_letter_encoder, dead_letter_record
+from ..functions.dead_letter import (
+    built_once,
+    byte,
+    dead_letter_record,
+    let,
+    varints,
+)
 
 __all__ = [
     "DEAD_LETTER_AVSC",
@@ -135,6 +147,45 @@ def encode_dead_letter(d: dict) -> bytes:
     """dict (DEAD_LETTER_SCHEMA shape) → Avro binary; a naive
     ``input_timestamp`` is read as UTC."""
     return _encode(*dead_letter_record(d))
+
+
+def _avro_column(dead_letter: Column) -> Column:
+    """:func:`_encode` as one Catalyst expression.  The nine zig-zag
+    inputs (six string lengths, partition, offset, millis) become varints
+    in one lambda; the record concatenates them with the UTF-8 bytes."""
+
+    def record(x: Column) -> Column:
+        c = x["cause"]
+        strings = [
+            x["input_value"], x["topic"], x["description"],
+            c["error_class"], c["message"], c["stack_trace"],
+        ]
+        longs = [
+            x["partition"].cast("bigint"), x["offset"], F.unix_millis(x["input_timestamp"]),
+        ]
+        zs = [F.octet_length(s).cast("bigint") * 2 for s in strings]
+        zs += [F.shiftleft(v, 1).bitwiseXOR(F.shiftright(v, 63)) for v in longs]
+
+        def write(v: Column) -> Column:
+            iv, topic, desc, ec, msg, st = (
+                F.concat(v[i], s.cast("binary")) for i, s in enumerate(strings)
+            )
+            partition, offset, millis = v[6], v[7], v[8]
+
+            def opt(b):  # union ["null", T]: zig-zag branch 0, or 1 and the value
+                return F.coalesce(F.concat(byte(2), b), byte(0))
+
+            return F.concat(
+                opt(iv), opt(topic), opt(partition), opt(offset), desc,
+                opt(ec), opt(msg), opt(st), opt(millis),
+            )
+
+        return F.when(
+            x["description"].isNull(),
+            F.raise_error("DeadLetter.description must not be NULL"),
+        ).otherwise(let(varints(zs), write))
+
+    return let(dead_letter, lambda x: F.when(x.isNotNull(), record(x)))
 
 
 def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
@@ -240,8 +291,8 @@ def to_avro_dead_letter(dead_letter: Column, use_jvm: object = "auto") -> Column
     (the ``AvroDeadLetterConverter`` analog, ``AvroDeadLetterConverter.java:34-49``).
 
     ``use_jvm``: ``"auto"`` (default) uses the built-in JVM ``to_avro``
-    when the spark-avro module is loaded and the spec-encoder ``arrow_udf``
-    otherwise; ``True`` requires the JVM path (raises if unavailable);
+    when the spark-avro module is loaded and the spec encoder's Catalyst
+    expression otherwise; ``True`` requires the JVM path (raises if unavailable);
     ``False`` forces the spec encoder (used by the cross-check test)."""
     if use_jvm is True or use_jvm == "auto":
         if jvm_avro_available():
@@ -254,7 +305,7 @@ def to_avro_dead_letter(dead_letter: Column, use_jvm: object = "auto") -> Column
                 "(add org.apache.spark:spark-avro to spark.jars.packages)"
             )
 
-    return dead_letter_encoder(_encode)(dead_letter)
+    return built_once("avro", dead_letter, _avro_column)
 
 
 # ---------------------------------------------------------------------------

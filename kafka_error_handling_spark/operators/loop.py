@@ -17,9 +17,9 @@ Two Arrow transports feed the loop, with no pandas in between:
 
 Input contract, the same for every family (the reference hands nulls
 through as themselves, ``SuccessValue.java:49-51``): SQL NULL reaches the
-function as ``None`` and NaN as ``nan`` (``pa.Array.to_pylist``); a
-timestamp as a naive ``datetime`` holding its wall-clock time in the
-session time zone; a map as a ``dict``.  On the way out :func:`to_arrow`
+function as ``None`` and NaN as ``nan``, an integer as ``int``
+(:func:`_pylist`); a timestamp as a naive ``datetime`` holding its
+wall-clock time in the session time zone; a map as a ``dict``.  On the way out :func:`to_arrow`
 reads a naive ``datetime`` the same way, and a struct result may be a
 dict (by field name) or a tuple (by position).
 """
@@ -70,13 +70,30 @@ def call_once(fn: Callable[..., Any], args: tuple, on_error: OnError) -> Any:
     return run_records(fn, [args], on_error)[0][0]
 
 
+def _pylist(a: pa.Array) -> list:
+    """``a.to_pylist()``, through numpy for string, integer, float and
+    boolean arrays: on pyarrow 16.1 ``to_pylist`` boxes one Arrow scalar per
+    value (0.46 µs per int64, 1.0 µs per string, against 0.02 / 0.14 µs).
+    numpy turns a NULL string or boolean into ``None`` but a NULL number
+    into NaN, so numbers with NULLs are filled and masked back."""
+    t = a.type
+    numeric = pa.types.is_integer(t) or pa.types.is_floating(t)
+    text = pa.types.is_string(t) or pa.types.is_large_string(t)
+    if not (numeric or text or pa.types.is_boolean(t)):
+        return a.to_pylist()
+    if not (numeric and a.null_count):
+        return a.to_numpy(zero_copy_only=False).tolist()
+    valid = a.is_valid().to_numpy(zero_copy_only=False).tolist()
+    return [v if ok else None for v, ok in zip(a.fill_null(0).to_numpy().tolist(), valid)]
+
+
 def py_columns(arrays: Sequence[pa.Array]) -> list:
     """Arrow columns → Python lists under the input contract above."""
     out = []
     for a in arrays:
         if pa.types.is_timestamp(a.type) and a.type.tz is not None:
             a = pc.local_timestamp(a)
-        values = a.to_pylist()
+        values = _pylist(a)
         if pa.types.is_map(a.type):
             values = [None if m is None else dict(m) for m in values]
         out.append(values)

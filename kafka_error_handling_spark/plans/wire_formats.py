@@ -12,8 +12,8 @@ the proto3 wire format (tag = field<<3|wiretype, LEN submessages,
 wrapper/default suppression) are small enough to express as SQL blob
 expressions, so the oracle never touches the Python encoders.  Together
 with the pytest round-trips this triangulates three implementations:
-the engine column path (struct plumbing + Arrow null sentinels + the
-spec encoder), the SQL spec derivation, and the decoder.
+the engine column path (struct plumbing + the spec encoder's Catalyst
+expression), the SQL spec derivation, and the decoder.
 
 Fixture matrix mirrors ``AvroDeadLetterConverterTest.java:39-82`` /
 ``ProtoDeadLetterConverterTest.java`` (all optional fields present; only

@@ -13,7 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import IntegerType, StringType
+from pyspark.sql.types import IntegerType, StringType, StructType
 
 import kafka_error_handling_spark as keh
 from kafka_error_handling_spark.formats.avro_format import (
@@ -27,11 +27,7 @@ from kafka_error_handling_spark.formats.proto_format import (
     to_proto_dead_letter,
 )
 from kafka_error_handling_spark.functions import headers as H
-from kafka_error_handling_spark.functions.dead_letter import (
-    DEAD_LETTER_SCHEMA,
-    dead_letter_record,
-    dead_letter_records,
-)
+from kafka_error_handling_spark.functions.dead_letter import DEAD_LETTER_SCHEMA
 
 FULL = {
     "description": "step failed",
@@ -421,11 +417,142 @@ def test_proto_round_trip_property(rec):
     assert out["input_timestamp"] == rec["input_timestamp"]
 
 
+# Wider than the round-trip strategies: long strings (multi-byte length
+# varints), the whole int64 range and microsecond timestamps before 1970
+# (floored millis and seconds).
+_long_text = st.builds(lambda c, n: c * n, st.characters(), st.integers(64, 20_000))
+_wide_text = st.one_of(_opt_text, _long_text)
+_wide_dead_letters = st.fixed_dictionaries(
+    {
+        "description": st.one_of(st.text(max_size=300), _long_text),
+        "cause": st.one_of(
+            st.none(),
+            st.fixed_dictionaries(
+                {"message": _wide_text, "stack_trace": _wide_text, "error_class": _opt_text}
+            ),
+        ),
+        "input_value": _wide_text,
+        "topic": _opt_text,
+        "partition": _opt_int32,
+        "offset": st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+        "input_timestamp": st.one_of(
+            st.none(),
+            st.datetimes(min_value=datetime(1900, 1, 1), max_value=datetime(2100, 1, 1)),
+        ),
+    }
+)
+# DEAD_LETTER_SCHEMA with every field nullable, so a NULL cause fits.
+_DL_ARROW = to_arrow_type(
+    StructType.fromJson(
+        {
+            "type": "struct",
+            "fields": [
+                dict(f.jsonValue(), nullable=True) for f in DEAD_LETTER_SCHEMA.fields
+            ],
+        }
+    )
+)
+
+
 @settings(max_examples=100, deadline=None)
-@given(recs=st.lists(st.one_of(st.none(), _dead_letters), max_size=20))
-def test_arrow_reader_matches_the_per_record_reader(recs):
-    """The fallbacks' column reader yields, row for row, what the
-    per-record encoders read from the same dead letters as dicts."""
-    arr = pa.array(recs, to_arrow_type(DEAD_LETTER_SCHEMA))
-    want = [None if d is None else dead_letter_record(d) for d in recs]
-    assert dead_letter_records(arr) == want
+@given(recs=st.lists(st.one_of(st.none(), _wide_dead_letters), max_size=20))
+def test_catalyst_encoders_match_the_per_record_encoders(spark, recs):
+    """The spec fallbacks' Catalyst expressions write, row for row, the
+    bytes of the per-record encoders (NULL for a NULL struct), in a UTC and
+    in a New York session.  Naive timestamps are UTC instants on both
+    sides."""
+    df = spark.createDataFrame(pa.table({"dl": pa.array(recs, _DL_ARROW)}))
+    want = [
+        (None, None) if d is None else (encode_dead_letter(d), encode_proto_dead_letter(d))
+        for d in recs
+    ]
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            rows = df.select(
+                to_avro_dead_letter(F.col("dl"), use_jvm=False).alias("avro"),
+                to_proto_dead_letter(F.col("dl")).alias("proto"),
+            ).collect()
+            got = [tuple(None if b is None else bytes(b) for b in r) for r in rows]
+            assert got == want, tz
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow")
+
+
+def _plain_dead_letters(spark, description="plan"):
+    """A dead-letter frame whose own plan runs no Python."""
+    err = F.struct(*[F.lit(v).alias(k) for k, v in (
+        ("error_class", "ValueError"), ("message", "m"), ("stack_trace", "t"),
+        ("input_value", "v"),
+    )])
+    errs = spark.range(4).select(F.col("id").alias("key"), err.alias("error"))
+    return keh.dead_letters(errs, description, key_cols=["key"], offset_col="key")
+
+
+def test_fallback_encoders_plan_no_python(spark):
+    """The DLQ encode plan of both spec fallbacks holds no Python node."""
+    dlq = _plain_dead_letters(spark)
+    for enc in (
+        to_avro_dead_letter(F.col("dead_letter"), use_jvm=False),
+        to_proto_dead_letter(F.col("dead_letter")),
+    ):
+        q = dlq.select("key", enc.alias("value"))
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert not [n for n in _PYTHON_NODES if n in plan], plan
+        assert len(q.collect()) == 4
+
+
+def test_fallback_columns_are_built_once_per_input(spark):
+    """Equal input expressions share one built Column; a column of another
+    frame, or the other format, does not."""
+    avro = to_avro_dead_letter(F.col("dead_letter"), use_jvm=False)
+    assert to_avro_dead_letter(F.col("dead_letter"), use_jvm=False) is avro
+    proto = to_proto_dead_letter(F.col("dead_letter"))
+    assert to_proto_dead_letter(F.col("dead_letter")) is proto
+    assert proto is not avro
+    df1, df2 = spark.range(1), spark.range(1)
+    assert to_avro_dead_letter(df1["id"], use_jvm=False) is not to_avro_dead_letter(
+        df2["id"], use_jvm=False
+    )
+
+
+def test_fallback_column_memo_under_concurrent_callers(spark):
+    """Streaming queries run their batch functions on their own threads:
+    concurrent callers with one new input still share one built Column."""
+    import sys
+    import threading
+
+    got, interval = [], sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(
+                target=lambda: got.extend(
+                    to_avro_dead_letter(F.col("dead_letter_threads"), use_jvm=False)
+                    for _ in range(5)
+                )
+            )
+            for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(got) == 40 and all(c is got[0] for c in got)
+
+
+def test_null_description(spark):
+    """A NULL description fails the Avro task (the schema requires the
+    string) and writes nothing in proto (proto3 omits an unset string)."""
+    dlq = _plain_dead_letters(spark, description=None)
+    row = dlq.select(to_proto_dead_letter(F.col("dead_letter")).alias("p")).first()
+    assert decode_proto_dead_letter(bytes(row.p))["description"] == ""
+    with pytest.raises(Exception, match="description"):
+        dlq.select(to_avro_dead_letter(F.col("dead_letter"), use_jvm=False)).collect()

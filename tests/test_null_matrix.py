@@ -173,3 +173,30 @@ def test_input_contract(new_york, family, shape, col, result_form):
     ).collect()
     assert [r.seen for r in rows] == [repr(e) for e in expected]
     assert all(r.same for r in rows)
+
+
+from hypothesis import given, settings, strategies as st  # noqa: E402
+import pyarrow as pa  # noqa: E402
+
+from kafka_error_handling_spark.operators.loop import py_columns  # noqa: E402
+
+_ARROW_LISTS = st.one_of(
+    st.tuples(st.just(pa.int64()), st.lists(st.one_of(st.none(), st.integers(-(2**63), 2**63 - 1)))),
+    st.tuples(st.just(pa.int32()), st.lists(st.one_of(st.none(), st.integers(-(2**31), 2**31 - 1)))),
+    st.tuples(st.just(pa.float64()), st.lists(st.one_of(st.none(), st.floats(allow_nan=True)))),
+    st.tuples(st.just(pa.string()), st.lists(st.one_of(st.none(), st.text()))),
+    st.tuples(st.just(pa.large_string()), st.lists(st.one_of(st.none(), st.text()))),
+    st.tuples(st.just(pa.bool_()), st.lists(st.one_of(st.none(), st.booleans()))),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(typed=_ARROW_LISTS, offset=st.integers(0, 3))
+def test_py_columns_equals_to_pylist(typed, offset):
+    """The numpy path of ``py_columns`` hands over what ``to_pylist`` does:
+    NULL as ``None`` (for floats too), NaN as ``nan``, integers as ``int``
+    (``repr`` tells ``1`` from ``1.0`` and ``-0.0`` from ``0.0``), also on
+    a sliced array."""
+    dtype, values = typed
+    arr = pa.array(values, dtype).slice(offset)
+    assert repr(py_columns([arr])[0]) == repr(arr.to_pylist())

@@ -52,7 +52,10 @@ from plan_lint import lint_plan, plan_string  # noqa: E402
 # embedding_label_purity), and the per-bucket near-dup gram matrix
 # (+1 each embedding_neardup, embedding_threshold_sweep).  All are
 # MapInPandas / grouped-map — no row-at-a-time Python anywhere.
-TOTAL_ARROW_PYTHON_PIN = 43
+# 43 -> 41 — the two DLQ wire-byte gates (dlq_avro_wire, dlq_proto_wire)
+# lose their Arrow-Python node: the spec encoders became Catalyst
+# expressions.
+TOTAL_ARROW_PYTHON_PIN = 41
 # r11: 447 -> 480 — search_eval_macro (+25: five topics × the audited
 # single-query eval plan, each exchange a bounded pool / scalar, plus
 # the 12-row per-query∪macro fold) and sample_quality_classifier
