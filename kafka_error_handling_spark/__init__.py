@@ -64,5 +64,8 @@ from .operators import (  # noqa: F401
     errors,
 )
 from .functions.dead_letter import dead_letter_struct, dead_letters  # noqa: F401
+from .worker_imports import install as _install_worker_imports
+
+_install_worker_imports()  # inside a Python worker only
 
 __version__ = "0.1.0"

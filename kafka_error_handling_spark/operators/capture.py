@@ -302,6 +302,12 @@ def values(
     Array results (the ``flat_map*`` shapes) are exploded — the 0-or-1 /
     0-or-n element contract of ``SuccessValue.getValues``
     (``SuccessValue.java:48-52``).
+
+    On an unpersisted serde-captured frame (``sources.serde``) the branch
+    re-parses: predicate pushdown copies the bound parse into the branch
+    filter, so the executed plan holds 3 parser nodes where the frame alone
+    holds 1.  ``run_captured`` persists the frame before it splits it, so a
+    stream parses once.
     """
     r = F.col(processed_col)
     out = df.filter(r[ERROR_COL].isNull())
@@ -319,6 +325,9 @@ def errors(df: DataFrame, processed_col: str = "r") -> DataFrame:
     original input columns — the old key is preserved for free because Spark
     never destroys input columns (``ErrorKeyValue.java:48-51``,
     ``ProcessedKeyValue.java:64-67``).
+
+    Re-parses an unpersisted serde-captured frame as :func:`values` does
+    (3 parser nodes in the executed plan, against 1 for the frame).
     """
     r = F.col(processed_col)
     keep = [c for c in df.columns if c != processed_col]

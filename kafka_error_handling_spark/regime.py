@@ -29,12 +29,13 @@ of paying both on every query.
 Writing: PySpark turns ``spark.createDataFrame(rows, ddl)`` over a list
 of Python rows into a pickled RDD plus an identity ``map`` that runs in a
 Python worker (``Scan ExistingRDD`` in the plan).  Every task of that
-map pays the worker's fixed start-up cost before it reads a row — about
-0.13 s of CPU per task under CPython 3.11, because the
-``importlib.invalidate_caches()`` in the worker's file set-up makes each
-of its zipimporters re-read the ``pyspark.zip`` directory.  On a 4-core
-host the identity maps of the two graph driver regimes alone cost 0.5 s
-of Python-worker CPU per registry pass.  An Arrow table instead crosses
+map starts a Python task, and in a worker that has not imported this
+package (so runs without :mod:`.worker_imports`) it first pays the
+per-task import-cache invalidation — 0.13–0.23 s of CPU under
+CPython 3.11, the worker's zipimporters re-reading ``pyspark.zip`` and
+the Spark jars.  On a 4-core host the identity maps of the two graph
+driver regimes alone cost 0.5 s of Python-worker CPU per registry
+pass.  An Arrow table instead crosses
 to the JVM once, on the driver, and plans as a ``LocalTableScan``: a
 ``LocalRelation`` that carries size statistics (so consumers'
 joins may auto-broadcast it) and starts no Python worker.  Past

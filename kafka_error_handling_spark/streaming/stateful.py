@@ -14,7 +14,9 @@ The Spark analog: wrap the user's per-record stateful function inside
 
 Each record goes through the shared per-record loop
 (:func:`..operators.loop.run_records`) under the capture family's policy,
-as ``capture_process`` does.
+as ``capture_process`` does, after its group is read back into Arrow under
+the input schema so that it reaches ``fn`` under the same input contract
+(:func:`..operators.loop.py_columns`).
 
 Scale: state lives in the state store keyed by group — per-key partition
 parallel, no driver involvement.
@@ -25,14 +27,16 @@ from __future__ import annotations
 from typing import Callable, Iterable, Iterator, Optional, Tuple
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from ..model import ErrorFilter, processed_schema
 from ..operators.capture import capture_policy, record_value
-from ..operators.loop import run_records
+from ..operators.loop import py_columns, run_records
 
 __all__ = ["capture_stateful_process"]
 
@@ -57,16 +61,21 @@ def capture_stateful_process(
     renders ``input_value_col``, or the whole row when it is not given.
 
     ``applyInPandasWithState`` is the only API that carries a
-    ``GroupState`` (there is no Arrow variant), so rows reach ``fn`` as
-    dicts of pandas values: a NULL numeric input arrives as NaN here, not
-    as ``None`` as in the other capture shapes, and an integer column with
-    a NULL in the frame arrives as floats.
+    ``GroupState`` (there is no Arrow variant), so each group arrives as
+    pandas and is read back through Arrow under ``df``'s schema: a row
+    reaches ``fn`` as a dict under the input contract of the other capture
+    shapes (NULL as ``None``, an integer as ``int``, a timestamp as a naive
+    session-zone ``datetime``, an array as a ``list``).  Only a
+    floating-point column cannot tell NULL from NaN on this path: pandas
+    holds both as NaN, and both reach ``fn`` as ``None``.
     """
     if input_value_col:
         on_error = capture_policy(error_filter, record_value(input_value_col))
     else:  # the whole row: ``(row_dict,)``'s last argument
         on_error = capture_policy(error_filter)
     out_schema = StructType([df.schema[c] for c in key_cols] + processed_schema(result_type).fields)
+    in_schema = to_arrow_schema(df.schema)
+    names = list(df.columns)
 
     def _proc(
         key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -74,7 +83,13 @@ def capture_stateful_process(
         def forwards(rec):
             return list(fn(key, rec, state) or ())
 
-        recs = [(rec,) for pdf in pdfs for rec in pdf.to_dict("records")]
+        recs = [
+            (dict(zip(names, row)),)
+            for pdf in pdfs
+            for row in zip(*py_columns(
+                pa.RecordBatch.from_pandas(pdf, schema=in_schema, preserve_index=False).columns
+            ))
+        ]
         results, errors = run_records(forwards, recs, on_error)
         out_rows = [
             (*key, fwd, err)

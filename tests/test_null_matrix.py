@@ -4,6 +4,7 @@ error-on-null, null factory args → NPE analog)."""
 
 import datetime
 import math
+import uuid
 
 import pytest
 
@@ -20,6 +21,7 @@ from pyspark.sql.types import (
 
 import kafka_error_handling_spark as keh
 from kafka_error_handling_spark.model import render_value
+from kafka_error_handling_spark.streaming.stateful import capture_stateful_process
 
 
 def kv_df(spark, rows):
@@ -107,15 +109,22 @@ def test_struct_input_rendered_as_json_in_dlq(spark):
 #
 # The reference hands null keys and values to the user function as
 # themselves (SuccessValue.java:49-51).  Capture, log and describe, column
-# and processor shapes, must all pass SQL NULL as None, NaN as nan and a
-# timestamp as a naive datetime in the session time zone, and must accept
-# a struct result as a dict (by name) or a tuple (by position).
+# and processor shapes, and stateful capture must all pass SQL NULL as None,
+# NaN as nan, an integer as int, an array as a list and a timestamp as a
+# naive datetime in the session time zone, and must accept a struct result
+# as a dict (by name) or a tuple (by position).  Stateful capture alone
+# hands a NaN double over as None: its groups arrive as pandas, which holds
+# NULL and NaN alike.
 
 _WALL = datetime.datetime(2024, 1, 2, 3, 4, 5)
 _INPUTS = {
+    "arr": (ArrayType(IntegerType()), [(1, [0, 1]), (None, None), (3, [2, 3])]),
     "d": (DoubleType(), [(1, 1.5), (None, None), (3, math.nan)]),
     "ts": (TimestampType(), [(1, _WALL), (None, None), (3, _WALL)]),
 }
+_SHAPES = [
+    (family, shape) for family in ["capture", "log", "describe"] for shape in ["column", "processor"]
+] + [("capture", "stateful")]
 
 
 @pytest.fixture
@@ -126,9 +135,32 @@ def new_york(spark):
     spark.conf.set("spark.sql.session.timeZone", old)
 
 
-def _through(family, shape, df, fn, result_type, col):
+def _stateful(df, fn, result_type, col, tmp_path):
+    """``fn(key, value)`` through stateful capture over ``df`` replayed as
+    a stream; a batch frame of ``id``, ``col`` and ``result``."""
+    df.write.parquet(str(tmp_path / "src"))
+    stream = df.sparkSession.readStream.schema(df.schema).parquet(str(tmp_path / "src"))
+    name = f"contract_{uuid.uuid4().hex}"
+    q = (
+        capture_stateful_process(
+            stream, ["id", col], lambda key, rec, state: [fn(rec["key"], rec[col])],
+            result_type, StructType([StructField("n", IntegerType())]),
+        )
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt")).start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return df.sparkSession.table(name)
+
+
+def _through(family, shape, df, fn, result_type, col, tmp_path):
     """Run ``fn(key, value)`` over ``df`` through one family and shape;
     the frame's ``result`` column holds what it returned."""
+    if shape == "stateful":
+        return _stateful(df, fn, result_type, col, tmp_path)
     if shape == "column":
         if family == "capture":
             return keh.values(keh.capture_map_values_with_key(df, fn, result_type, value_col=col))
@@ -148,17 +180,21 @@ def _through(family, shape, df, fn, result_type, col):
 
 @pytest.mark.parametrize("result_form", ["dict", "tuple"])
 @pytest.mark.parametrize("col", sorted(_INPUTS))
-@pytest.mark.parametrize("shape", ["column", "processor"])
-@pytest.mark.parametrize("family", ["capture", "log", "describe"])
-def test_input_contract(new_york, family, shape, col, result_form):
+@pytest.mark.parametrize("family, shape", _SHAPES)
+def test_input_contract(new_york, family, shape, col, result_form, tmp_path):
     spark = new_york
     # the literal is New York wall-clock time, as the session reads it
     df = spark.sql(
         "SELECT id, key, CAST(d AS DOUBLE) AS d,"
-        " IF(id = 1, NULL, TIMESTAMP'2024-01-02 03:04:05') AS ts"
+        " IF(id = 1, NULL, TIMESTAMP'2024-01-02 03:04:05') AS ts,"
+        " IF(id = 1, NULL, array(id, key)) AS arr"
         " FROM VALUES (0, 1, '1.5'), (1, NULL, NULL), (2, 3, 'NaN') AS t(id, key, d)"
     )
     value_type, expected = _INPUTS[col]
+    same = F.col(col)
+    if shape == "stateful" and col == "d":
+        expected = [(k, None if v != v else v) for k, v in expected]  # NaN → None
+        same = F.nanvl(same, F.lit(None))
     result_type = StructType(
         [StructField("seen", StringType()), StructField("echo", value_type)]
     )
@@ -167,9 +203,9 @@ def test_input_contract(new_york, family, shape, col, result_form):
         seen = repr((k, v))
         return (seen, v) if result_form == "tuple" else {"seen": seen, "echo": v}
 
-    out = _through(family, shape, df, fn, result_type, col)
+    out = _through(family, shape, df, fn, result_type, col, tmp_path)
     rows = out.orderBy("id").select(
-        "result.seen", F.col("result.echo").eqNullSafe(F.col(col)).alias("same")
+        "result.seen", F.col("result.echo").eqNullSafe(same).alias("same")
     ).collect()
     assert [r.seen for r in rows] == [repr(e) for e in expected]
     assert all(r.same for r in rows)

@@ -83,6 +83,21 @@ def test_serde_capture_parses_each_record_once(spark):
         assert len(errors(frame).collect()) == 1
 
 
+def test_serde_branches_reparse_an_unpersisted_frame(spark):
+    """Known cost, pinned so that a fix shows: ``values`` / ``errors`` on an
+    unpersisted captured frame run the parser 3 times, because predicate
+    pushdown copies the bound parse into the branch filter.  ``run_captured`` persists first and parses once."""
+    js = spark.createDataFrame([(1, '{"k": 1}'), (2, "{")], "id int, payload string")
+    csv = spark.createDataFrame([(1, "5,1.5"), (2, "x,y")], "id int, line string")
+    for frame, parser in [
+        (from_json_captured(js, "payload", "k int, s string"), "from_json("),
+        (from_csv_captured(csv, "line", "a int, b double"), "from_csv("),
+    ]:
+        for branch in (values, errors):
+            plan = branch(frame)._jdf.queryExecution().executedPlan().toString()
+            assert plan.count(parser) == 3, plan
+
+
 def test_from_json_captured_streaming_dual_sink(spark, tmp_path):
     """The serde edge composes with the streaming runner: corrupt payloads
     reach the DLQ sink, good ones the value sink, in one pass."""
