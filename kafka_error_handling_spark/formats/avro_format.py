@@ -6,31 +6,27 @@ Two encode paths, dispatched at runtime (``to_avro_dead_letter``):
 
 1. **JVM** — ``pyspark.sql.avro.functions.to_avro(struct, DEAD_LETTER_AVSC)``
    whenever the spark-avro module is actually loaded (probed once per
-   session with an eager analysis; the import alone succeeds even without
-   the jar).  Fully JVM-side, matching the reference's
+   SparkContext with an eager analysis; the import alone succeeds even
+   without the jar).  Fully JVM-side, matching the reference's
    ``AvroDeadLetterConverter.java:34-49`` cost profile — no Python in the
    encode hot path on DLQ-heavy runs.
 2. **Spec fallback** — spark-avro does not ship with pyspark, so the
    fallback is a minimal, self-contained implementation of the *public*
    Avro binary encoding spec (zig-zag varint longs, length-prefixed UTF-8
    strings, union branch indices) specialized to the DeadLetter schema,
-   round-trip tested by our own decoder.  It is one Catalyst expression
-   (:func:`_avro_column`), so the DLQ write of a micro-batch starts no
-   Python worker: each such task costs 0.19-0.23 s of worker CPU before it
-   reads a row, far more than the encoding of a batch's dead letters.
-   The struct and the nine varint inputs are bound once each as lambda
-   variables, and the Column is built once per input expression
-   (:func:`..functions.dead_letter.built_once`).  :func:`encode_dead_letter`
-   is the per-record reference it is tested against.
+   round-trip tested by our own decoder.  :func:`_encode` is the only
+   Avro encoder: the fallback calls it per dead letter in one ``arrow_udf``
+   (:func:`..functions.dead_letter.dead_letter_encoder`), and
+   :func:`encode_dead_letter` calls it on a dict.
 
 Both paths write the same bytes in any session time zone: Avro binary
 encoding is fully determined by (schema, value) — no framing, no field
 tags — the JVM path receives the struct re-projected into exact .avsc
 field order, and both write ``input_timestamp`` as the UTC instant in
 milliseconds that ``timestamp-millis`` requires (floored, like Spark's
-``microsToMillis``).  The fallback encodes a NULL struct to NULL and
-fails the task on a NULL description, which the schema does not allow.
-Field order:
+``microsToMillis``).  The fallback encodes a NULL struct to NULL;
+:func:`_encode` raises ``ValueError`` on a NULL description, which the
+schema does not allow.  Field order:
 
     input_value?, topic?, partition?, offset?, description,
     cause{error_class?, message?, stack_trace?}, input_timestamp?(millis)
@@ -42,15 +38,13 @@ import json
 from datetime import datetime, timedelta
 from typing import Any, Optional
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..functions.dead_letter import (
-    built_once,
-    byte,
+    dead_letter_encoder,
     dead_letter_record,
-    let,
-    varints,
+    probed_per_context,
 )
 
 __all__ = [
@@ -128,6 +122,8 @@ def _encode(
     message, stack_trace, error_class, cause_is_null, input_us,
 ) -> bytes:
     """One flat dead-letter record → Avro binary, .avsc field order."""
+    if description is None:
+        raise ValueError("DeadLetter.description must not be NULL")
     return b"".join(
         [
             _opt_string(input_value),
@@ -147,45 +143,6 @@ def encode_dead_letter(d: dict) -> bytes:
     """dict (DEAD_LETTER_SCHEMA shape) → Avro binary; a naive
     ``input_timestamp`` is read as UTC."""
     return _encode(*dead_letter_record(d))
-
-
-def _avro_column(dead_letter: Column) -> Column:
-    """:func:`_encode` as one Catalyst expression.  The nine zig-zag
-    inputs (six string lengths, partition, offset, millis) become varints
-    in one lambda; the record concatenates them with the UTF-8 bytes."""
-
-    def record(x: Column) -> Column:
-        c = x["cause"]
-        strings = [
-            x["input_value"], x["topic"], x["description"],
-            c["error_class"], c["message"], c["stack_trace"],
-        ]
-        longs = [
-            x["partition"].cast("bigint"), x["offset"], F.unix_millis(x["input_timestamp"]),
-        ]
-        zs = [F.octet_length(s).cast("bigint") * 2 for s in strings]
-        zs += [F.shiftleft(v, 1).bitwiseXOR(F.shiftright(v, 63)) for v in longs]
-
-        def write(v: Column) -> Column:
-            iv, topic, desc, ec, msg, st = (
-                F.concat(v[i], s.cast("binary")) for i, s in enumerate(strings)
-            )
-            partition, offset, millis = v[6], v[7], v[8]
-
-            def opt(b):  # union ["null", T]: zig-zag branch 0, or 1 and the value
-                return F.coalesce(F.concat(byte(2), b), byte(0))
-
-            return F.concat(
-                opt(iv), opt(topic), opt(partition), opt(offset), desc,
-                opt(ec), opt(msg), opt(st), opt(millis),
-            )
-
-        return F.when(
-            x["description"].isNull(),
-            F.raise_error("DeadLetter.description must not be NULL"),
-        ).otherwise(let(varints(zs), write))
-
-    return let(dead_letter, lambda x: F.when(x.isNotNull(), record(x)))
 
 
 def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
@@ -237,33 +194,24 @@ def decode_dead_letter(buf: bytes) -> dict:
     return out
 
 
-_JVM_AVRO = {"checked": False, "ok": False}
-
-
-def jvm_avro_available(spark=None) -> bool:
+@probed_per_context
+def jvm_avro_available(spark) -> bool:
     """True iff the spark-avro module is loaded in this session.
 
     ``from pyspark.sql.avro.functions import to_avro`` succeeds even
     without the jar (the column builds lazily and only analysis raises
     ``AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE``), so the probe forces a
-    one-row analysis once and caches the answer."""
-    if _JVM_AVRO["checked"]:
-        return _JVM_AVRO["ok"]
-    _JVM_AVRO["checked"] = True
+    one-row analysis, once per SparkContext."""
     try:
         from pyspark.sql.avro.functions import to_avro as _probe_to_avro
 
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            return False
         probe = spark.range(1).select(
             _probe_to_avro(F.struct(F.lit("x").alias("a")))
         )
         probe.schema  # eager analysis; raises if the avro source is absent
-        _JVM_AVRO["ok"] = True
+        return True
     except Exception:  # noqa: BLE001 - any failure means "use the fallback"
-        _JVM_AVRO["ok"] = False
-    return _JVM_AVRO["ok"]
+        return False
 
 
 def _avsc_ordered(dead_letter: Column) -> Column:
@@ -291,8 +239,8 @@ def to_avro_dead_letter(dead_letter: Column, use_jvm: object = "auto") -> Column
     (the ``AvroDeadLetterConverter`` analog, ``AvroDeadLetterConverter.java:34-49``).
 
     ``use_jvm``: ``"auto"`` (default) uses the built-in JVM ``to_avro``
-    when the spark-avro module is loaded and the spec encoder's Catalyst
-    expression otherwise; ``True`` requires the JVM path (raises if unavailable);
+    when the spark-avro module is loaded and the spec encoder's
+    ``arrow_udf`` otherwise; ``True`` requires the JVM path (raises if unavailable);
     ``False`` forces the spec encoder (used by the cross-check test)."""
     if use_jvm is True or use_jvm == "auto":
         if jvm_avro_available():
@@ -305,7 +253,7 @@ def to_avro_dead_letter(dead_letter: Column, use_jvm: object = "auto") -> Column
                 "(add org.apache.spark:spark-avro to spark.jars.packages)"
             )
 
-    return built_once("avro", dead_letter, _avro_column)
+    return dead_letter_encoder(_encode)(dead_letter)
 
 
 # ---------------------------------------------------------------------------

@@ -13,10 +13,11 @@ with the reference's ``ProtoDeadLetter``
 
 spark-protobuf does not ship with pyspark, so the fallback encodes the
 *public* proto3 wire format directly (tag = field<<3 | wiretype;
-LEN-prefixed submessages; wrapper types = one-field messages) as one
-Catalyst expression (:func:`_proto_column`): the DLQ write starts no
-Python worker.  :func:`encode_proto_dead_letter` is the per-record
-reference it is tested against.  Null handling mirrors
+LEN-prefixed submessages; wrapper types = one-field messages).
+:func:`_encode` is the only proto encoder: the fallback calls it per dead
+letter in one ``arrow_udf``
+(:func:`..functions.dead_letter.dead_letter_encoder`), and
+:func:`encode_proto_dead_letter` calls it on a dict.  Null handling mirrors
 ``ProtoDeadLetterConverter.java:41-78``: absent optional fields are simply
 omitted (wrappers encode presence), the ``Cause`` submessage is written
 whenever the struct's ``cause`` is not NULL, and a NULL struct encodes to
@@ -31,16 +32,12 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 from typing import Optional
 
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Column
 
 from ..functions.dead_letter import (
-    built_once,
-    byte,
+    dead_letter_encoder,
     dead_letter_record,
-    let,
-    varint,
-    varints,
+    probed_per_context,
 )
 
 __all__ = [
@@ -146,63 +143,6 @@ def encode_proto_dead_letter(d: dict) -> bytes:
     return _encode(*dead_letter_record(d))
 
 
-def _len_prefixed(payloads: list) -> Column:
-    """``array(varint(len(p)) + p for p in payloads)``, NULL where ``p`` is
-    NULL; lengths stay below 2**35, five varint bytes."""
-    return F.transform(
-        F.array(*payloads), lambda p: F.concat(varint(F.octet_length(p).cast("bigint"), 5), p)
-    )
-
-
-def _proto_column(dead_letter: Column) -> Column:
-    """:func:`_encode` as one Catalyst expression, in three levels of
-    varints: string lengths and integer values; the lengths of the wrapper
-    payloads; the length of ``Cause``.  A payload is NULL when its field is
-    absent and empty when proto3 suppresses its value."""
-
-    def record(x: Column) -> Column:
-        c = x["cause"]
-        strings = [
-            x["description"], c["message"], c["stack_trace"],
-            c["error_class"], x["input_value"], x["topic"],
-        ]
-        us = F.unix_micros(x["input_timestamp"])
-        ints = [
-            x["partition"].cast("bigint"), x["offset"],
-            F.unix_seconds(x["input_timestamp"]), F.pmod(us, F.lit(10**6)) * 1000,
-        ]
-        zs = [F.octet_length(s) for s in strings] + ints
-
-        def field(tag, n, v):  # a varint field, suppressed when 0
-            return F.when(n != 0, F.concat(byte(tag), v)).when(n == 0, byte())
-
-        def level1(v: Column) -> Column:
-            desc, msg, st, ec, iv, topic = (
-                F.when(s != "", F.concat(byte(0x0A), v[i], s.cast("binary")))
-                .otherwise(s.cast("binary"))
-                for i, s in enumerate(strings)
-            )
-            partition, offset = (field(0x08, n, v[6 + i]) for i, n in enumerate(ints[:2]))
-            ts = F.concat(field(0x08, ints[2], v[8]), field(0x10, ints[3], v[9]))
-
-            def level2(w: Column) -> Column:
-                def opt(tag, i):
-                    return F.coalesce(F.concat(byte(tag), w[i]), byte())
-
-                cause = F.when(c.isNotNull(), F.concat(opt(0x0A, 0), opt(0x12, 1), opt(0x1A, 2)))
-                return F.concat(
-                    F.coalesce(desc, byte()),
-                    F.coalesce(F.concat(byte(0x12), _len_prefixed([cause])[0]), byte()),
-                    opt(0x1A, 3), opt(0x22, 4), opt(0x2A, 5), opt(0x32, 6), opt(0x3A, 7),
-                )
-
-            return let(_len_prefixed([msg, st, ec, iv, topic, partition, offset, ts]), level2)
-
-        return let(varints(zs), level1)
-
-    return let(dead_letter, lambda x: F.when(x.isNotNull(), record(x)))
-
-
 def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
     shift = acc = 0
     while True:
@@ -273,31 +213,23 @@ def decode_proto_dead_letter(buf: bytes) -> dict:
     return out
 
 
-_JVM_PROTO = {"checked": False, "ok": False}
-
-
-def jvm_protobuf_available(spark=None) -> bool:
-    """True iff the spark-protobuf module is loaded (probed once: the
-    import succeeds without the jar; only analysis raises)."""
-    if _JVM_PROTO["checked"]:
-        return _JVM_PROTO["ok"]
-    _JVM_PROTO["checked"] = True
+@probed_per_context
+def jvm_protobuf_available(spark) -> bool:
+    """True iff the spark-protobuf module is loaded (probed once per
+    SparkContext: the import succeeds without the jar; only analysis
+    raises)."""
     try:
         from pyspark.sql.protobuf.functions import to_protobuf  # noqa: F401
 
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            return False
         # no descriptor-free probe exists for protobuf; reflect on the JVM
         # class registry instead of building a throwaway descriptor file
         jvm = spark.sparkContext._jvm
         jvm.java.lang.Class.forName(
             "org.apache.spark.sql.protobuf.CatalystDataToProtobuf"
         )
-        _JVM_PROTO["ok"] = True
+        return True
     except Exception:  # noqa: BLE001 - any failure means "use the fallback"
-        _JVM_PROTO["ok"] = False
-    return _JVM_PROTO["ok"]
+        return False
 
 
 def to_proto_dead_letter(
@@ -320,4 +252,4 @@ def to_proto_dead_letter(
 
         return to_protobuf(dead_letter, message_name, desc_file_path)
 
-    return built_once("proto", dead_letter, _proto_column)
+    return dead_letter_encoder(_encode)(dead_letter)

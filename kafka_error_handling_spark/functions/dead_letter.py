@@ -13,25 +13,29 @@ JVM-side, whole-stage-codegen friendly:
 
 Converters are ``Column → Column`` functions: identity keeps the struct,
 :mod:`..formats.avro_format` / :mod:`..formats.proto_format` render the
-byte-compatible Avro / proto3 encodings of the reference's schemas.  Their
-spec fallbacks are Catalyst expressions too, built from the blocks at the
-end of this module (:func:`let`, :func:`varint`, :func:`built_once`), so
-no step of the DLQ path starts a Python worker.  The per-record reference
-encoders map a dead-letter dict to one flat record
-(:func:`dead_letter_record`).
+byte-compatible Avro / proto3 encodings of the reference's schemas.  Each
+format has one encoder, a function of one flat record: its spec fallback
+calls it per dead letter in one ``arrow_udf`` (:func:`dead_letter_encoder`,
+reading the struct through :func:`dead_letter_records`), and its
+per-record encoder calls it on a dict (:func:`dead_letter_record`).
 """
 
 from __future__ import annotations
 
-import threading
+import functools
 from datetime import datetime, timedelta, timezone
 from typing import Callable, Optional
 
+import pyarrow as pa
+
 from pyspark import SparkContext
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import BinaryType
 
 from ..model import DEAD_LETTER_SCHEMA
+from ..operators.loop import _pylist
 
 __all__ = [
     "dead_letter_struct",
@@ -168,72 +172,47 @@ def dead_letter_record(d: dict) -> tuple:
     return (*map(d.get, _TOP), *map(cause.get, _CAUSE), not cause, ts)
 
 
-# ---------------------------------------------------------------------------
-# Building blocks of the Catalyst spec encoders (formats/).  Catalyst has no
-# public let, and an expression referenced twice is copied twice, so a
-# value that is read more than once is bound as a lambda variable: it rides
-# a one-element ``transform`` (:func:`let`).  Every varint of one level goes
-# through one ``transform`` (:func:`varints`), so the per-byte tree of
-# :func:`varint` appears once per level, not once per field.
-# ---------------------------------------------------------------------------
+def dead_letter_records(arr: pa.StructArray) -> list:
+    """A dead-letter struct column → one record per row (``None`` for a
+    NULL struct), read leaf column by leaf column; ``input_timestamp`` is
+    its int64 storage, UTC microseconds whatever the session time zone."""
+    cause = arr.field("cause")
+    cols = [_pylist(arr.field(n)) for n in _TOP]
+    cols += [_pylist(cause.field(n)) for n in _CAUSE]
+    cols.append(_pylist(cause.is_null()))
+    cols.append(_pylist(arr.field("input_timestamp").cast(pa.int64())))
+    return [None if n else r for n, r in zip(_pylist(arr.is_null()), zip(*cols))]
 
 
-def let(value: Column, body: Callable[[Column], Column]) -> Column:
-    """``body(v)`` with ``v = value`` evaluated once per row."""
-    return F.transform(F.array(value), body)[0]
+def dead_letter_encoder(encode: Callable[..., bytes]):
+    """An ``arrow_udf`` writing ``encode(*record)`` per dead letter, NULL
+    for a NULL struct."""
+
+    def _write(arr: pa.Array) -> pa.Array:
+        rows = dead_letter_records(arr)
+        return pa.array([None if r is None else encode(*r) for r in rows], pa.binary())
+
+    return arrow_udf(_write, BinaryType())
 
 
-def varint(z: Column, max_bytes: int = 10) -> Column:
-    """Base-128 varint of ``z`` (a BIGINT read as unsigned 64-bit) as
-    binary, NULL for NULL.  ``z`` is copied three times per byte, so pass a
-    lambda variable or a cheap expression; ``max_bytes`` < 10 serves values
-    below ``2 ** (7 * max_bytes)``, such as lengths."""
+def probed_per_context(probe: Callable[[SparkSession], bool]) -> Callable[..., bool]:
+    """``probe(spark)`` → ``available(spark=None)``, which runs the probe
+    once per live SparkContext.  A call with no active session answers from
+    the live context's probe, or False without recording anything when it
+    has none, so a later call with a session probes."""
+    seen = (None, False)  # the SparkContext probed, and its answer
 
-    def group(k):
-        return F.shiftrightunsigned(z, 7 * k)
+    @functools.wraps(probe)
+    def available(spark: Optional[SparkSession] = None) -> bool:
+        nonlocal seen
+        spark = spark or SparkSession.getActiveSession()
+        sc = SparkContext._active_spark_context if spark is None else spark.sparkContext
+        probed, ok = seen
+        if probed is sc:
+            return ok
+        if spark is None:
+            return False
+        seen = (sc, probe(spark))
+        return seen[1]
 
-    hex_ = F.lpad(F.hex(group(max_bytes - 1)), 2, "0")
-    for k in reversed(range(max_bytes - 1)):
-        more = F.hex(group(k).bitwiseAND(0x7F).bitwiseOR(0x80))
-        hex_ = F.when(group(k + 1) == 0, F.lpad(F.hex(group(k)), 2, "0")).otherwise(
-            F.concat(more, hex_)
-        )
-    return F.unhex(hex_)
-
-
-def varints(zs: list) -> Column:
-    """``array(varint(z) for z in zs)`` through one lambda."""
-    return F.transform(F.array(*[z.cast("bigint") for z in zs]), lambda z: varint(z))
-
-
-def byte(*values: int) -> Column:
-    """A binary literal."""
-    return F.lit(bytearray(values))
-
-
-# (SparkContext, kind, hashCode, JVM Column, built Column), oldest first.
-_BUILT: list = []
-_BUILT_MAX = 32
-_BUILT_LOCK = threading.Lock()  # streaming queries call back on their own threads
-
-
-def built_once(kind: str, dead_letter: Column, build: Callable[[Column], Column]) -> Column:
-    """``build(dead_letter)``, built once per ``kind``, input expression and
-    SparkContext.  Building a spec encoder costs one py4j call per node
-    (median 0.20 s for Avro, 0.36 s for proto on a 4-core host; a hit costs
-    ~1 ms), and ``foreachBatch`` builds the DLQ frame anew for every
-    micro-batch.  Inputs match by the JVM Column's structural
-    equality: two ``F.col("dead_letter")`` are equal, ``df1["x"]`` and
-    ``df2["x"]`` are not (they carry their plan's id)."""
-    sc = SparkContext._active_spark_context
-    jc = dead_letter._jc
-    h = jc.hashCode()
-    with _BUILT_LOCK:
-        _BUILT[:] = [e for e in _BUILT if e[0] is sc]
-        for _, k, eh, ejc, col in _BUILT:
-            if k == kind and eh == h and jc.equals(ejc):
-                return col
-        col = build(dead_letter)
-        _BUILT.append((sc, kind, h, jc, col))
-        del _BUILT[:-_BUILT_MAX]
-        return col
+    return available

@@ -12,8 +12,10 @@ the proto3 wire format (tag = field<<3|wiretype, LEN submessages,
 wrapper/default suppression) are small enough to express as SQL blob
 expressions, so the oracle never touches the Python encoders.  Together
 with the pytest round-trips this triangulates three implementations:
-the engine column path (struct plumbing + the spec encoder's Catalyst
-expression), the SQL spec derivation, and the decoder.
+the engine column path (struct plumbing + the Arrow read of the struct +
+the format's one encoder, which the per-record encoders call too), the
+SQL spec derivation, and the decoder.  The SQL derivation is the only
+check of the encoder that does not share its code.
 
 Fixture matrix mirrors ``AvroDeadLetterConverterTest.java:39-82`` /
 ``ProtoDeadLetterConverterTest.java`` (all optional fields present; only

@@ -239,6 +239,34 @@ def test_jvm_probe_harmless(spark):
     assert jvm_protobuf_available(spark) in (True, False)
 
 
+def test_jvm_probe_waits_for_a_session(spark, monkeypatch):
+    """A probe asked with no active session and no answer for the live
+    SparkContext says False without recording it, so the next call with a
+    session runs the probe; the answer is then kept for that SparkContext
+    and probed again for another."""
+    from kafka_error_handling_spark.formats.avro_format import jvm_avro_available
+    from kafka_error_handling_spark.formats.proto_format import (
+        jvm_protobuf_available,
+    )
+    from kafka_error_handling_spark.functions.dead_letter import probed_per_context
+    from pyspark.sql import SparkSession
+
+    calls = []
+    available = probed_per_context(lambda s: calls.append(s.sparkContext) or True)
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "getActiveSession", classmethod(lambda cls: None))
+        assert available() is False
+        assert jvm_avro_available() is False and jvm_protobuf_available() is False
+    assert calls == []
+    assert available() is True and calls == [spark.sparkContext]
+    assert available(spark) is True and len(calls) == 1
+    with monkeypatch.context() as m:  # a thread with no session, same context
+        m.setattr(SparkSession, "getActiveSession", classmethod(lambda cls: None))
+        assert available() is True and len(calls) == 1
+    other = type("OtherSession", (), {"sparkContext": object()})()
+    assert available(other) is True and len(calls) == 2
+
+
 def test_avro_jvm_requires_flag_raises_without_jar(spark):
     from kafka_error_handling_spark.formats import avro_format as AF
 
@@ -419,8 +447,11 @@ def test_proto_round_trip_property(rec):
 
 # Wider than the round-trip strategies: long strings (multi-byte length
 # varints), the whole int64 range and microsecond timestamps before 1970
-# (floored millis and seconds).
-_long_text = st.builds(lambda c, n: c * n, st.characters(), st.integers(64, 20_000))
+# (floored millis and seconds).  Characters are UTF-8 encodable: a Spark
+# string cannot hold a lone surrogate, and Arrow rejects one.
+_long_text = st.builds(
+    lambda c, n: c * n, st.characters(codec="utf-8"), st.integers(64, 20_000)
+)
 _wide_text = st.one_of(_opt_text, _long_text)
 _wide_dead_letters = st.fixed_dictionaries(
     {
@@ -456,11 +487,11 @@ _DL_ARROW = to_arrow_type(
 
 @settings(max_examples=100, deadline=None)
 @given(recs=st.lists(st.one_of(st.none(), _wide_dead_letters), max_size=20))
-def test_catalyst_encoders_match_the_per_record_encoders(spark, recs):
-    """The spec fallbacks' Catalyst expressions write, row for row, the
-    bytes of the per-record encoders (NULL for a NULL struct), in a UTC and
-    in a New York session.  Naive timestamps are UTC instants on both
-    sides."""
+def test_fallback_udfs_match_the_per_record_encoders(spark, recs):
+    """The spec fallbacks' ``arrow_udf``s write, row for row, the bytes of
+    the per-record encoders (NULL for a NULL struct), in a UTC and in a New
+    York session: the struct reaches the shared encoder as the same record
+    that a dict does.  Naive timestamps are UTC instants on both sides."""
     df = spark.createDataFrame(pa.table({"dl": pa.array(recs, _DL_ARROW)}))
     want = [
         (None, None) if d is None else (encode_dead_letter(d), encode_proto_dead_letter(d))
@@ -480,9 +511,6 @@ def test_catalyst_encoders_match_the_per_record_encoders(spark, recs):
         spark.conf.set("spark.sql.session.timeZone", zone)
 
 
-_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow")
-
-
 def _plain_dead_letters(spark, description="plan"):
     """A dead-letter frame whose own plan runs no Python."""
     err = F.struct(*[F.lit(v).alias(k) for k, v in (
@@ -493,8 +521,9 @@ def _plain_dead_letters(spark, description="plan"):
     return keh.dead_letters(errs, description, key_cols=["key"], offset_col="key")
 
 
-def test_fallback_encoders_plan_no_python(spark):
-    """The DLQ encode plan of both spec fallbacks holds no Python node."""
+def test_fallback_encoders_plan_one_arrow_udf(spark):
+    """The DLQ encode plan of each spec fallback holds exactly one
+    ``ArrowEvalPython`` and no other Python node."""
     dlq = _plain_dead_letters(spark)
     for enc in (
         to_avro_dead_letter(F.col("dead_letter"), use_jvm=False),
@@ -502,50 +531,9 @@ def test_fallback_encoders_plan_no_python(spark):
     ):
         q = dlq.select("key", enc.alias("value"))
         plan = q._jdf.queryExecution().executedPlan().toString()
-        assert not [n for n in _PYTHON_NODES if n in plan], plan
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "MapInArrow" not in plan and "BatchEvalPython" not in plan, plan
         assert len(q.collect()) == 4
-
-
-def test_fallback_columns_are_built_once_per_input(spark):
-    """Equal input expressions share one built Column; a column of another
-    frame, or the other format, does not."""
-    avro = to_avro_dead_letter(F.col("dead_letter"), use_jvm=False)
-    assert to_avro_dead_letter(F.col("dead_letter"), use_jvm=False) is avro
-    proto = to_proto_dead_letter(F.col("dead_letter"))
-    assert to_proto_dead_letter(F.col("dead_letter")) is proto
-    assert proto is not avro
-    df1, df2 = spark.range(1), spark.range(1)
-    assert to_avro_dead_letter(df1["id"], use_jvm=False) is not to_avro_dead_letter(
-        df2["id"], use_jvm=False
-    )
-
-
-def test_fallback_column_memo_under_concurrent_callers(spark):
-    """Streaming queries run their batch functions on their own threads:
-    concurrent callers with one new input still share one built Column."""
-    import sys
-    import threading
-
-    got, interval = [], sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [
-            threading.Thread(
-                target=lambda: got.extend(
-                    to_avro_dead_letter(F.col("dead_letter_threads"), use_jvm=False)
-                    for _ in range(5)
-                )
-            )
-            for _ in range(8)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=120)
-        assert not any(t.is_alive() for t in threads)
-    finally:
-        sys.setswitchinterval(interval)
-    assert len(got) == 40 and all(c is got[0] for c in got)
 
 
 def test_null_description(spark):
@@ -554,5 +542,8 @@ def test_null_description(spark):
     dlq = _plain_dead_letters(spark, description=None)
     row = dlq.select(to_proto_dead_letter(F.col("dead_letter")).alias("p")).first()
     assert decode_proto_dead_letter(bytes(row.p))["description"] == ""
-    with pytest.raises(Exception, match="description"):
+    message = "DeadLetter.description must not be NULL"
+    with pytest.raises(Exception, match=message):
         dlq.select(to_avro_dead_letter(F.col("dead_letter"), use_jvm=False)).collect()
+    with pytest.raises(ValueError, match=message):
+        encode_dead_letter(dict(MINIMAL, description=None))

@@ -55,7 +55,11 @@ from plan_lint import lint_plan, plan_string  # noqa: E402
 # 43 -> 41 — the two DLQ wire-byte gates (dlq_avro_wire, dlq_proto_wire)
 # lose their Arrow-Python node: the spec encoders became Catalyst
 # expressions.
-TOTAL_ARROW_PYTHON_PIN = 41
+# 41 -> 43 — the two gates get their node back: each spec encoder is one
+# arrow_udf again, calling the per-record encoder (a Python task costs no
+# import-cache rebuild any more, and the Catalyst encoders took 2-5x
+# longer to plan).
+TOTAL_ARROW_PYTHON_PIN = 43
 # r11: 447 -> 480 — search_eval_macro (+25: five topics × the audited
 # single-query eval plan, each exchange a bounded pool / scalar, plus
 # the 12-row per-query∪macro fold) and sample_quality_classifier
