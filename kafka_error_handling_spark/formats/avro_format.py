@@ -90,9 +90,14 @@ DEAD_LETTER_AVSC = json.dumps(
 )
 
 
+_ONE_BYTE = [bytes([b]) for b in range(128)]
+
+
 def _zigzag(n: int) -> bytes:
     """Avro long: zig-zag + base-128 varint (public Avro spec)."""
     z = (n << 1) ^ (n >> 63)
+    if 0 <= z < 128:  # most varints of a dead letter: branches, short lengths
+        return _ONE_BYTE[z]
     out = bytearray()
     while True:
         b = z & 0x7F

@@ -73,7 +73,12 @@ message ProtoDeadLetter {
 """
 
 
+_ONE_BYTE = [bytes([b]) for b in range(128)]
+
+
 def _varint(n: int) -> bytes:
+    if 0 <= n < 128:  # most varints of a dead letter: tags, short lengths
+        return _ONE_BYTE[n]
     out = bytearray()
     while True:
         b = n & 0x7F

@@ -21,10 +21,10 @@ Shared semantics, identical to the reference:
 Architecture notes (scale):
 
 - The wrapped Python function is the slow path by definition; it runs in
-  the shared per-record loop (:mod:`.loop`) inside a nondeterministic
-  ``arrow_udf`` (map/flatMap shapes) or ``mapInArrow`` (processor shapes),
-  so one bad row poisons neither the batch nor the task, while JVM↔Python
-  transfer stays vectorized.
+  the shared per-record loop (:mod:`.loop`) inside one nondeterministic
+  ``arrow_udf`` for every shape (a processor's 0..n forwards ride an
+  array the JVM explodes), so one bad row poisons neither the batch nor
+  the task, while JVM↔Python transfer stays vectorized.
 - Nondeterminism stops Catalyst from duplicating a capture UDF into both
   the success and the error branch — the wrapped function must run exactly
   once per record (SURVEY.md §4).
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, StructField, StructType
 
 from ..model import ErrorFilter, error_payload, is_recoverable
-from .loop import ERROR_COL, RESULT_COL, OnError, column_udf, process_records
+from .loop import ERROR_COL, PROCESSED_COL, RESULT_COL, OnError, column_udf, process_records
 
 __all__ = [
     "capture_udf",
@@ -337,7 +337,7 @@ def errors(df: DataFrame, processed_col: str = "r") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Processor shapes — arbitrary 0..n forwards per record via mapInArrow
+# Processor shapes — arbitrary 0..n forwards per record, exploded in the JVM
 # (reference ``ErrorCapturingProcessor.java:164-176``,
 #  ``ErrorCapturingValueProcessor.java:159-168``)
 # ---------------------------------------------------------------------------
@@ -350,8 +350,8 @@ def record_value(input_value_col: str) -> Callable[[tuple], Any]:
 
 def capture_process(
     df: DataFrame,
-    processor: Callable[[dict], Optional[Iterable[dict]]],
-    result_type: StructType,
+    processor: Callable[[dict], Optional[Iterable[Any]]],
+    result_type: DataType,
     error_filter: Optional[ErrorFilter] = None,
     pass_through: Optional[Sequence[str]] = None,
     input_value_col: Optional[str] = None,
@@ -362,46 +362,23 @@ def capture_process(
     ``context.forward`` — ``ErrorCapturingApiProcessorContext.java:31-59``:
     every forward is re-wrapped as a success).  Output schema:
     ``pass_through`` columns (default: all input columns) + ``result``
-    (nullable ``result_type``) + ``error``.  Success rows: one per forward,
-    error NULL.  Error rows: one, result NULL, ``input_value`` rendered from
-    ``input_value_col`` (default: the last input column).
+    (nullable ``result_type``, of any type) + ``error``.  Success rows: one
+    per forward, error NULL.  Error rows: one, result NULL, ``input_value``
+    rendered from ``input_value_col`` (default: the last input column).
     """
     on_error = capture_policy(error_filter, record_value(input_value_col or df.columns[-1]))
-    return process_records(df, processor, result_type, on_error, pass_through)
+    p = process_records(df, processor, result_type, on_error, pass_through)
+    r = F.col(PROCESSED_COL)
+    # a failed record keeps one row (NULL result), one without forwards none
+    failed = F.array(F.lit(None).cast(result_type))
+    return p.select(
+        *[c for c in p.columns if c != PROCESSED_COL],
+        F.explode(F.coalesce(r[RESULT_COL], failed)).alias(RESULT_COL),
+        r[ERROR_COL].alias(ERROR_COL),
+    )
 
 
-def process_values(
-    df: DataFrame,
-    processor: Callable[[dict], Optional[Iterable[Any]]],
-    result_type: DataType,
-    on_error: OnError,
-    pass_through: Optional[Sequence[str]] = None,
-) -> DataFrame:
-    """The ``processValues`` shape over :func:`process_records`: a
-    non-struct ``result_type`` rides a one-field struct and is unwrapped."""
-    if isinstance(result_type, StructType):
-        return process_records(df, processor, result_type, on_error, pass_through)
-    wrapped = StructType([StructField("value", result_type, True)])
-
-    def _proc(rec):
-        out = processor(rec)
-        return None if out is None else [(v,) for v in out]
-
-    out = process_records(df, _proc, wrapped, on_error, pass_through)
-    return out.withColumn(RESULT_COL, F.col(RESULT_COL)["value"])
-
-
-def capture_process_values(
-    df: DataFrame,
-    processor: Callable[[dict], Optional[Iterable[Any]]],
-    result_type: DataType,
-    error_filter: Optional[ErrorFilter] = None,
-    pass_through: Optional[Sequence[str]] = None,
-    input_value_col: Optional[str] = None,
-) -> DataFrame:
-    """``ErrorCapturingValueProcessor`` — fixed-key ``processValues`` shape
-    (``ErrorCapturingValueProcessor.java:68,159-168``): forwards carry only a
-    new value; key columns pass through unchanged.
-    """
-    on_error = capture_policy(error_filter, record_value(input_value_col or df.columns[-1]))
-    return process_values(df, processor, result_type, on_error, pass_through)
+#: ``ErrorCapturingValueProcessor`` — the fixed-key ``processValues`` shape
+#: (``ErrorCapturingValueProcessor.java:68,159-168``): forwards carry only a
+#: new value, which may be of any ``result_type``; the key columns pass through.
+capture_process_values = capture_process

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
 from ..model import ProcessingException
-from .loop import OnError, call_once, column_udf, process_records
+from .loop import PROCESSED_COL, RESULT_COL, OnError, call_once, column_udf, process_records
 
 __all__ = [
     "describe_flat_map_values",
@@ -165,12 +165,14 @@ def describe_process(
     value_col: Optional[str] = None,
 ) -> DataFrame:
     """``ErrorDescribingProcessor`` / ``ErrorDescribingValueProcessor``
-    (``ErrorDescribingProcessor.java:64,101-107``): ``mapInArrow`` wrapper
-    re-raising enriched; multi-forward supported like
+    (``ErrorDescribingProcessor.java:64,101-107``): re-raising enriched;
+    multi-forward supported like
     :func:`~kafka_error_handling_spark.operators.capture.capture_process`.
     """
     on_error = describe_policy(record_message(value_col or df.columns[-1], key_cols))
-    return process_records(df, processor, result_type, on_error, pass_through, with_error=False)
+    p = process_records(df, processor, result_type, on_error, pass_through, with_error=False)
+    keep = [c for c in p.columns if c != PROCESSED_COL]
+    return p.select(*keep, F.explode(PROCESSED_COL).alias(RESULT_COL))
 
 
 # Type-transparent flat aliases — the reference reuses the same describing

@@ -39,7 +39,7 @@ from pyspark.sql.types import ArrayType, DataType
 from ..model import ErrorFilter, is_recoverable
 from . import capture as C
 from .describe import Describer, column_message, record_message
-from .loop import OnError, call_once, process_records
+from .loop import PROCESSED_COL, OnError, call_once, process_records
 
 __all__ = [
     "log_errors",
@@ -248,14 +248,6 @@ def log_flat_map(
     )
 
 
-def _drop_error_rows(p: DataFrame) -> DataFrame:
-    # processor shapes emit a top-level error column, so the drop metric is
-    # the flat-column variant of _drop_errors (ADVICE r1: drops must stay
-    # counted once per-worker max_logs suppression kicks in)
-    p = _observe_drops(p, F.col(C.ERROR_COL).isNotNull())
-    return p.filter(F.col(C.ERROR_COL).isNull()).drop(C.ERROR_COL)
-
-
 def log_process(
     df: DataFrame,
     processor,
@@ -266,27 +258,19 @@ def log_process(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingProcessor`` (``ErrorLoggingProcessor.java:68,157-167``):
-    ``mapInArrow`` wrapper, exception → log + skip row.  Also covers the
-    legacy ``ErrorLoggingFlatValueTransformer(WithKey)`` shapes
+    the processor shape of :func:`~.capture.capture_process`, exception →
+    log + skip row.  Also covers the legacy
+    ``ErrorLoggingFlatValueTransformer(WithKey)`` shapes
     (``ErrorLoggingFlatValueTransformer.java:65,148-158``) — same semantics,
     legacy API surface.
     """
     on_error = log_policy(error_filter, record_message(input_value_col or df.columns[-1]), max_logs)
-    return _drop_error_rows(process_records(df, processor, result_type, on_error, pass_through))
+    p = process_records(df, processor, result_type, on_error, pass_through)
+    return _drop_errors(p, PROCESSED_COL, observe=True)
 
 
-def log_process_values(
-    df: DataFrame,
-    processor,
-    result_type,
-    error_filter: Optional[ErrorFilter] = None,
-    pass_through=None,
-    input_value_col=None,
-    max_logs: Optional[int] = DEFAULT_MAX_LOGS,
-) -> DataFrame:
-    """``ErrorLoggingValueProcessor`` (``ErrorLoggingValueProcessor.java:66,152-162``)."""
-    on_error = log_policy(error_filter, record_message(input_value_col or df.columns[-1]), max_logs)
-    return _drop_error_rows(C.process_values(df, processor, result_type, on_error, pass_through))
+#: ``ErrorLoggingValueProcessor`` (``ErrorLoggingValueProcessor.java:66,152-162``)
+log_process_values = log_process
 
 
 # ---------------------------------------------------------------------------

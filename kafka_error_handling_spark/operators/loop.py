@@ -9,19 +9,20 @@ the record's error payload — the per-record wrapper of the reference
 ``Exception`` (``KeyboardInterrupt``, ``SystemExit``, … — the analog of Java
 ``Error``) are never caught.
 
-Two Arrow transports feed the loop, with no pandas in between:
-
-- :func:`column_udf` — a nondeterministic ``arrow_udf`` for the map /
-  flatMap shapes;
-- :func:`process_records` — ``mapInArrow`` for the processor shapes.
+One Arrow transport feeds the loop, with no pandas in between:
+:func:`column_udf`, a nondeterministic ``arrow_udf``.  The map / flatMap
+shapes call it on their value (and key) columns; :func:`process_records`
+calls it on every input column and lets the JVM explode the 0..n
+forwards of each record.
 
 Input contract, the same for every family (the reference hands nulls
 through as themselves, ``SuccessValue.java:49-51``): SQL NULL reaches the
 function as ``None`` and NaN as ``nan``, an integer as ``int``
 (:func:`_pylist`); a timestamp as a naive ``datetime`` holding its
-wall-clock time in the session time zone; a map as a ``dict``.  On the way out :func:`to_arrow`
-reads a naive ``datetime`` the same way, and a struct result may be a
-dict (by field name) or a tuple (by position).
+wall-clock time in the session time zone; a map as a ``dict`` — at any
+depth of a struct, array or map (:func:`_mend`).  On the way out
+:func:`to_arrow` reads a naive ``datetime`` the same way, and a struct
+result may be a dict (by field name) or a tuple (by position).
 """
 
 from __future__ import annotations
@@ -33,20 +34,16 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
-from pyspark.sql.types import (
-    ArrayType,
-    DataType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, DataType, StructType, TimestampType
 
-from ..model import ERROR_SCHEMA, processed_schema
+from ..model import processed_schema
 
 # Column names of the ProcessedValue analog.
 RESULT_COL = "result"
 ERROR_COL = "error"
+# The processor transport's bound result column.
+PROCESSED_COL = "__keh_processed"
 
 OnError = Callable[[tuple, Exception], Optional[dict]]
 
@@ -87,6 +84,31 @@ def _pylist(a: pa.Array) -> list:
     return [v if ok else None for v, ok in zip(a.fill_null(0).to_numpy().tolist(), valid)]
 
 
+def _mend(t: pa.DataType) -> Optional[Callable[[Any], Any]]:
+    """For a type nested in a column, a function bringing one non-NULL
+    ``to_pylist`` value under the input contract: a zoned timestamp to
+    its naive wall-clock time, a map from a list of pairs to a ``dict``.
+    ``None`` when ``to_pylist`` already hands the value over as it is."""
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        return lambda v: v.replace(tzinfo=None)
+    if pa.types.is_map(t):
+        key, item = _mend(t.key_type), _mend(t.item_type)
+        return lambda m: {_apply(key, k): _apply(item, v) for k, v in m}
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        item = _mend(t.value_type)
+        if item is not None:
+            return lambda xs: [_apply(item, x) for x in xs]
+    if pa.types.is_struct(t):
+        fields = [(f.name, m) for f in t if (m := _mend(f.type)) is not None]
+        if fields:
+            return lambda d: {**d, **{n: _apply(m, d[n]) for n, m in fields}}
+    return None
+
+
+def _apply(mend: Optional[Callable[[Any], Any]], v: Any) -> Any:
+    return v if mend is None or v is None else mend(v)
+
+
 def py_columns(arrays: Sequence[pa.Array]) -> list:
     """Arrow columns → Python lists under the input contract above."""
     out = []
@@ -94,9 +116,8 @@ def py_columns(arrays: Sequence[pa.Array]) -> list:
         if pa.types.is_timestamp(a.type) and a.type.tz is not None:
             a = pc.local_timestamp(a)
         values = _pylist(a)
-        if pa.types.is_map(a.type):
-            values = [None if m is None else dict(m) for m in values]
-        out.append(values)
+        mend = _mend(a.type)
+        out.append(values if mend is None else [_apply(mend, v) for v in values])
     return out
 
 
@@ -168,41 +189,23 @@ def process_records(
     pass_through: Optional[Sequence[str]] = None,
     with_error: bool = True,
 ) -> DataFrame:
-    """The processor transport: ``mapInArrow`` calling ``processor(row_dict)``
-    once per row.  It may forward 0..n results (the analog of
-    ``context.forward``, ``ErrorCapturingApiProcessorContext.java:31-59``);
-    each becomes one output row with a NULL error, and a failed row becomes
-    one row with a NULL result.  Output: the ``pass_through`` columns
-    (default: all), taken from the input batch as they are, + ``result`` +
-    ``error`` (when ``with_error``)."""
-    keep = list(pass_through) if pass_through is not None else list(df.columns)
-    fields = [df.schema[c] for c in keep] + [StructField(RESULT_COL, result_type, True)]
-    if with_error:
-        fields.append(StructField(ERROR_COL, ERROR_SCHEMA, True))
-    out_schema = StructType(fields)
-    arrow_schema = to_arrow_schema(out_schema)
+    """The processor shapes over :func:`column_udf`: ``processor(row_dict)``
+    once per row, its 0..n forwards (the analog of ``context.forward``,
+    ``ErrorCapturingApiProcessorContext.java:31-59``) listed in an
+    ``array<result_type>``; ``on_error`` receives ``(row_dict,)``.  Output:
+    the ``pass_through`` columns (default: all) + :data:`PROCESSED_COL`,
+    ``struct<result: array, error>`` (just the array when ``with_error`` is
+    false), bound in one projection for the family's JVM explode."""
+    if PROCESSED_COL in df.columns:
+        raise ValueError(f"input must not already contain {PROCESSED_COL}")
     names = list(df.columns)
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
 
-    def forwards(rec):
-        return list(processor(rec) or ())
+    def forwards(*values):
+        return list(processor(dict(zip(names, values))) or ())
 
-    def _map(batches):
-        for batch in batches:
-            recs = [(dict(zip(names, row)),) for row in zip(*py_columns(batch.columns))]
-            results, errors = run_records(forwards, recs, on_error)
-            src, out, errs = [], [], []
-            for i, (fwds, err) in enumerate(zip(results, errors)):
-                for fwd in [None] if err is not None else fwds:
-                    src.append(i)
-                    out.append(fwd)
-                    errs.append(err)
-            take = pa.array(src, pa.int64())
-            cols = [batch.column(c).take(take) for c in keep]
-            cols.append(to_arrow(out, result_type, tz))
-            if with_error:
-                cols.append(to_arrow(errs, ERROR_SCHEMA, tz))
-            cols = [c.cast(f.type) for c, f in zip(cols, arrow_schema)]
-            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+    def on_record_error(values, exc):
+        return on_error((dict(zip(names, values)),), exc)
 
-    return df.mapInArrow(_map, out_schema)
+    udf = column_udf(forwards, ArrayType(result_type), on_record_error, with_error)
+    keep = names if pass_through is None else list(pass_through)
+    return df.select(*keep, udf(*[df[c] for c in names]).alias(PROCESSED_COL))

@@ -1,7 +1,7 @@
 """Correctness-gate queries exercising the error-handling decorator matrix.
 
-Each query runs the real Arrow-batched capture path (``arrow_udf`` /
-``mapInArrow`` around the shared per-record loop) with a
+Each query runs the real Arrow-batched capture path (one ``arrow_udf``
+around the shared per-record loop) with a
 *deterministically* failing user function, so a plain-SQL oracle can
 predict exactly which rows land in the success branch vs the
 dead-letter branch — this is how the engine's novel semantics (SURVEY.md
@@ -232,7 +232,8 @@ def _fanout_processor(rec: dict):
 
 def q_capture_process_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """captureErrors over the multi-forward process shape
-    (ErrorCapturingProcessor via mapInArrow): 1..n forwards per record."""
+    (ErrorCapturingProcessor; its forwards are exploded in the JVM): 1..n
+    forwards per record."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     from ..operators import capture_process

@@ -65,7 +65,8 @@ def capture_stateful_process(
     pandas and is read back through Arrow under ``df``'s schema: a row
     reaches ``fn`` as a dict under the input contract of the other capture
     shapes (NULL as ``None``, an integer as ``int``, a timestamp as a naive
-    session-zone ``datetime``, an array as a ``list``).  Only a
+    session-zone ``datetime``, an array as a ``list``, a map as a ``dict``,
+    at any depth).  Only a
     floating-point column cannot tell NULL from NaN on this path: pandas
     holds both as NaN, and both reach ``fn`` as ``None``.
     """

@@ -178,6 +178,58 @@ def test_capture_process_values_scalar_result(spark):
     assert all(r.key == 1 for r in ok)  # fixed key passes through
 
 
+@pytest.mark.parametrize(
+    "shape",
+    ["capture_process", "capture_process_values", "log_process", "log_process_values",
+     "describe_process"],
+)
+def test_processor_shapes_ride_one_arrow_udf(spark, shape):
+    """Every processor shape calls the processor once per record in one
+    ``arrow_udf`` and fans its forwards out in the JVM: a record that
+    forwards nothing gives no row, one that forwards twice two, a failed
+    one a single error row (capture) or none (log).  Describe rethrows, so
+    its input has no failing record."""
+    from pyspark.sql.types import StructField, StructType
+
+    rows = [(1, "none"), (2, "two"), (3, "boom")]
+    df = kv_df(spark, rows[:2] if shape == "describe_process" else rows)
+    struct = not shape.endswith("_values")
+    calls = spark.sparkContext.accumulator(0)
+
+    def proc(rec):
+        calls.add(1)
+        if rec["value"] == "boom":
+            raise ValueError("boom")
+        if rec["value"] == "none":
+            return []
+        return [{"out": "a"}, {"out": "b"}] if struct else ["a", "b"]
+
+    rt = StructType([StructField("out", StringType())]) if struct else StringType()
+    out = getattr(keh, shape)(df, proc, rt)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "MapInArrow" not in plan, plan
+
+    got = out.collect()
+    assert calls.value == df.count()
+    results = sorted(
+        (r.key, r.result and (r.result.out if struct else r.result)) for r in got
+    )
+    if shape.startswith("capture"):
+        assert results == [(2, "a"), (2, "b"), (3, None)]
+        assert [r.error.error_class for r in got if r.error] == ["ValueError"]
+        assert [r.error.input_value for r in got if r.error] == ["boom"]
+    else:
+        assert results == [(2, "a"), (2, "b")]
+    assert out.columns[:2] == ["key", "value"] and "__keh_processed" not in out.columns
+
+
+def test_processor_shapes_reject_the_bound_column(spark):
+    df = spark.createDataFrame([(1, "x")], "key int, __keh_processed string")
+    with pytest.raises(ValueError, match="__keh_processed"):
+        keh.capture_process(df, lambda rec: [], StringType())
+
+
 def test_dead_letters_projection(spark):
     df = kv_df(spark, [(1, "good"), (2, "bad")])
 

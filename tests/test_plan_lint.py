@@ -1,6 +1,6 @@
 """Plan-hygiene gate: no CartesianProduct / row-at-a-time Python UDF.
 
-``tools/plan_lint.py`` lints all 227 registry plans (artifact:
+``tools/plan_lint.py`` lints all 247 registry plans (artifact:
 ``artifacts/plan_lint.json``); this test keeps a fast cross-family subset in
 the pytest loop so a regression (a join losing its broadcast wrap, a
 ``F.udf`` slipping into a hot path) fails CI before the full lint runs.
