@@ -334,19 +334,10 @@ def _calibration() -> dict | None:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from tools.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("keh-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = build_session("keh-bench", CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()

@@ -1019,8 +1019,9 @@ def query_expansion_prf(
     # (<=fb_k and <=|q|+m rows) but sit at phase boundaries referenced by
     # several consumers; un-cut, Catalyst re-inlines the whole upstream
     # bm25 pipeline per consumer (the round-open plan ran 18 corpus
-    # scans, plans/r14/pre/search_query_expansion.txt). Eager
-    # localCheckpoints cut them to one evaluation each; values unchanged.
+    # scans: `git show 1e8569a:plans/r14/pre/search_query_expansion.txt`).
+    # Eager localCheckpoints cut them to one evaluation each; values
+    # unchanged.
     fb_ids = (
         bm25_topk(docs, query_terms, k=fb_k, text_col=text_col, id_col=id_col)
         .select(id_col)

@@ -5,22 +5,16 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from tools.session import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("keh-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        "keh-tests", 4, driver_memory="4g",
+        conf={"spark.sql.execution.arrow.pyspark.enabled": "true"},
     )
     yield spark
     spark.stop()

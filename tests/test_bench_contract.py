@@ -45,25 +45,43 @@ def test_headline_basket_is_frozen_and_timed():
     assert not missing, f"frozen basket names missing from registry: {missing}"
 
 
-def test_code_fingerprint_ignores_artifact_only_commits():
+def test_code_fingerprint_ignores_artifact_only_commits(tmp_path):
     """host_drift is only valid when the recorded bench belongs to the same
     CODE as the re-timed commit (ADVICE r8).  The fingerprint hashes the
-    timing-relevant paths, so the driver's artifact-only round-stamp commit
-    fingerprints identically to the final builder commit under it."""
-    head = bench._code_fingerprint(_REPO, "HEAD")
-    assert head.count("-") == len(bench._CODE_PATHS) - 1
-    assert "missing" not in head
-    # r8's stamp commit only added BENCH/VERDICT/CORRECTNESS artifacts on
-    # top of the last r8 builder commit — code fingerprints must match
-    stamp = "e07566a"
-    parent = subprocess.run(
-        ["git", "rev-parse", f"{stamp}^"],
-        cwd=_REPO, capture_output=True, text=True, timeout=30,
-    ).stdout.strip()
-    if parent:  # shallow clones may lack history; then there is nothing to pin
-        assert bench._code_fingerprint(_REPO, stamp) == bench._code_fingerprint(
-            _REPO, parent
+    timing-relevant paths, so an artifact-only commit (the round stamp's
+    BENCH/VERDICT/CORRECTNESS files) fingerprints identically to the code
+    commit under it, and a code commit does not.  Pinned on a throwaway
+    repository, so the test holds in an export without git history."""
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@example.com",
+             "-c", "commit.gpgsign=false", *args],
+            cwd=tmp_path, check=True, capture_output=True, timeout=30,
         )
+
+    (tmp_path / "kafka_error_handling_spark").mkdir()
+    (tmp_path / "kafka_error_handling_spark" / "op.py").write_text("x = 1\n")
+    (tmp_path / "tools").mkdir()
+    (tmp_path / "tools" / "tool.py").write_text("y = 1\n")
+    (tmp_path / "bench.py").write_text("z = 1\n")
+    git("init", "-q")
+    git("add", "-A")
+    git("commit", "-q", "-m", "code")
+    code = bench._code_fingerprint(str(tmp_path), "HEAD")
+    assert code.count("-") == len(bench._CODE_PATHS) - 1
+    assert "missing" not in code
+
+    (tmp_path / "BENCH_r99.json").write_text("{}\n")
+    git("add", "-A")
+    git("commit", "-q", "-m", "round 99: stamp")
+    assert bench._code_fingerprint(str(tmp_path), "HEAD") == code
+    assert bench._code_fingerprint(str(tmp_path), "HEAD~1") == code
+
+    (tmp_path / "tools" / "tool.py").write_text("y = 2\n")
+    git("commit", "-q", "-am", "tool change")
+    changed = bench._code_fingerprint(str(tmp_path), "HEAD")
+    assert changed != code and "missing" not in changed
 
 
 def test_calibration_scan_skips_mismatched_newer_records(tmp_path):

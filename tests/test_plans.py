@@ -706,9 +706,9 @@ def _final_tree(df) -> str:
     plan TREE (runtime exchange/stage reuse resolved, the '== Initial
     Plan ==' echo and the shared details section stripped) —
     pre-execution explain shows the unreused tree, so reuse invariants
-    must be pinned here (the tools/postexec_plan.py mechanism; ADVICE
-    r14 asked for these pins after the r14 census falsified a
-    static-reuse claim)."""
+    must be pinned here (the ``tools/profile_query.py --explain``
+    mechanism; ADVICE r14 asked for these pins after the r14 census
+    falsified a static-reuse claim)."""
     return _final_plan(df).split("== Initial Plan ==")[0]
 
 

@@ -10,10 +10,10 @@ orders exist to cancel slow-host drift WITHIN the comparison: a code
 regression shows up in both orders, load drift flips sign between them.
 
 The current working tree is addressed as ``.`` (run in place, dirty state
-included); any other rev gets ``git worktree add --detach``.  Trees that
-predate tools/profile_query.py get the CURRENT profiler copied in — the
-profiler only imports the tree's own ``__spark_entry__``, so the timed
-code is still the target tree's.
+included); any other rev gets ``git worktree add --detach``.  Both legs run
+THIS tree's profiler with ``--root <tree>``: it puts only that tree on
+``sys.path``, so the timed code is the target tree's whatever profiler the
+tree itself carries.
 
 Usage: python tools/ab_trees.py REV_A REV_B [--runs N] q1 [q2 ...]
 Writes runs/ab_<A>_vs_<B>.txt (``.`` named ``worktree``, other revs cut to
@@ -24,13 +24,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 import tempfile
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_PROFILER = os.path.join("tools", "profile_query.py")
+_PROFILER = os.path.join(_ROOT, "tools", "profile_query.py")
 
 
 def _rev_slug(rev: str) -> str:
@@ -43,12 +42,9 @@ def _rev_slug(rev: str) -> str:
 
 def _leg(tree_dir: str, names: list[str], runs: int) -> dict[str, list[float]]:
     """One fresh-session profiling leg; returns {query: [runs...]}."""
-    prof = os.path.join(tree_dir, _PROFILER)
-    if not os.path.exists(prof):
-        os.makedirs(os.path.dirname(prof), exist_ok=True)
-        shutil.copy(os.path.join(_ROOT, _PROFILER), prof)
     p = subprocess.run(
-        [sys.executable, _PROFILER, "--runs", str(runs), *names],
+        [sys.executable, _PROFILER, "--runs", str(runs), "--root", tree_dir,
+         *names],
         cwd=tree_dir, capture_output=True, text=True, timeout=3600,
         env=dict(os.environ),
     )

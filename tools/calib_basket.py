@@ -20,7 +20,6 @@ Do not edit — comparability across rounds is the whole point.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
@@ -29,21 +28,14 @@ CALIB_BASKET = ["q1_pricing_summary", "window_topk_orders", "dedup_exact"]
 
 def main() -> None:
     repo, sf_dir, cpus = sys.argv[1], sys.argv[2], sys.argv[3]
+    # this script's own tools/ is sys.path[0]; session.py never imports
+    # the package, so the one imported below is the target tree's
+    from session import build_session
+
     sys.path.insert(0, repo)
-
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("keh-calib")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = build_session("keh-calib", cpus, driver_memory="8g")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     jvm_gc = spark.sparkContext._jvm.System.gc

@@ -32,6 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
+from session import build_session, check_conf
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -296,6 +297,10 @@ def main():
     pathlike = [a for a in only if os.sep in a or a.startswith(".")]
     if pathlike:
         raise SystemExit(f"not a directory: {pathlike}")
+    # KEH_CHECK_CONF ("k=v;k=v", parsed before Spark starts) perturbs the
+    # session layout (spark.master, shuffle partitions) or strategy (AQE
+    # off, ...); results must be invariant to ALL of these perturbations
+    overlay = check_conf()
 
     import __spark_entry__ as entrymod
 
@@ -311,36 +316,9 @@ def main():
                 con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
         sys.exit(1 if lint_oracles(con, entrymod.oracle_sql()) else 0)
 
-    from pyspark.sql import SparkSession
-
-    # KEH_CHECK_MASTER / KEH_CHECK_SHUFFLE perturb the session layout —
-    # a result that changes with partition count (top-k ties, any_value,
-    # first-in-group) is nondeterministic at cluster scale even when the
-    # default-layout hash matches the oracle.  KEH_CHECK_CONF takes
-    # "key=value;key=value" for arbitrary execution-strategy perturbation
-    # (e.g. adaptive off, autoBroadcastJoinThreshold=-1 to force every
-    # join onto the shuffle path) — results must be invariant to ALL of
-    # these; only the physical strategy may change.  Defaults unchanged.
-    builder = (
-        SparkSession.builder.master(os.environ.get("KEH_CHECK_MASTER", "local[8]"))
-        .appName("keh-correctness")
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("KEH_CHECK_SHUFFLE", "8"),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-    )
-    for kv in os.environ.get("KEH_CHECK_CONF", "").split(";"):
-        if kv.strip():
-            k, sep, v = kv.partition("=")
-            # explicit raise, not assert: under `python -O` an assert is
-            # stripped and a malformed entry would silently become
-            # .config(key, "") — corrupting the perturbation run (ADVICE r6)
-            if not sep:
-                raise SystemExit(f"KEH_CHECK_CONF entry without '=': {kv!r}")
-            builder = builder.config(k.strip(), v.strip())
-    spark = builder.getOrCreate()
+    spark = build_session("keh-correctness", 8, driver_memory="8g", conf=overlay)
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    print(f"session {spark.sparkContext.master} shuffle.partitions={shuffle}")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -49,9 +49,10 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+
+from session import build_session, check_conf  # noqa: E402
 
 RED_NODES = ("CartesianProduct", "BatchEvalPython")
 ARROW_NODES = (
@@ -110,36 +111,26 @@ def main() -> None:
     pathlike = [a for a in only if os.sep in a or a.startswith(".")]
     if pathlike:
         raise SystemExit(f"not a directory: {pathlike}")
+    # KEH_CHECK_CONF (the correctness gate's "key=value;key=value"
+    # overlay, parsed before Spark starts) lints an auto-regime operator
+    # in its non-default regime without a code change, e.g.
+    #   KEH_CHECK_CONF=spark.keh.minhash.broadcastSignatures=false
+    overlay = check_conf()
 
     import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
 
     unknown = sorted(only - set(entrymod.queries()))
     if unknown:
         raise SystemExit(f"unknown query names: {unknown}")
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("keh-plan-lint")
-        .config("spark.sql.shuffle.partitions", "8")
-        # lint the STATIC plan: with AQE on, explain shows the initial
-        # AdaptiveSparkPlan, which carries no codegen-id annotations and
-        # re-plans at runtime; AQE only ever improves on what is linted here
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    # lint the STATIC plan: with AQE on, explain shows the initial
+    # AdaptiveSparkPlan, which carries no codegen-id annotations and
+    # re-plans at runtime; AQE only ever improves on what is linted here
+    spark = build_session(
+        "keh-plan-lint", 8, driver_memory="8g",
+        conf={"spark.sql.adaptive.enabled": "false", **overlay},
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    # forced-regime sweeps (VERDICT r7 #3 done-criteria): KEH_EXTRA_CONFS
-    # is a comma-separated k=v list applied to the lint session, e.g.
-    #   KEH_EXTRA_CONFS=spark.keh.minhash.broadcastSignatures=false
-    # so auto-regime operators can be linted in their non-default regime
-    # without a code change.
-    for kv in filter(None, os.environ.get("KEH_EXTRA_CONFS", "").split(",")):
-        k, _, v = kv.partition("=")
-        spark.conf.set(k.strip(), v.strip())
 
     # the default threshold of THIS session — restored between queries so
     # the stats sweep stays comparable with prior rounds' drift records

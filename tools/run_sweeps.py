@@ -15,7 +15,8 @@ strategy / row layout may change):
 - ``aqe_off``        spark.sql.adaptive.enabled=false
 - ``nobcast``        spark.sql.autoBroadcastJoinThreshold=-1
 - ``nocodegen``      spark.sql.codegen.wholeStage=false
-- ``layout``         local[3] / shuffle=5 (vs the default local[8]/8)
+- ``layout``         spark.master=local[3] + spark.sql.shuffle.partitions=5
+                     (vs the default local[8]/8)
 - ``permutation``    every table rewritten in seeded-random row order
 - ``tz``             TZ=America/New_York (host-timezone independence)
 - ``splits``         spark.sql.files.maxPartitionBytes=64k + openCostInBytes=0
@@ -58,7 +59,8 @@ SWEEPS: dict[str, dict] = {
     "nocodegen": {
         "env": {"KEH_CHECK_CONF": "spark.sql.codegen.wholeStage=false"}
     },
-    "layout": {"env": {"KEH_CHECK_MASTER": "local[3]", "KEH_CHECK_SHUFFLE": "5"}},
+    "layout": {"env": {"KEH_CHECK_CONF": "spark.master=local[3]"
+                                         ";spark.sql.shuffle.partitions=5"}},
     "permutation": {"env": {}, "permute": True},
     "tz": {"env": {"TZ": "America/New_York"}},
     "splits": {
@@ -95,8 +97,9 @@ def _permuted_copy(sf_dir: str, dest: str) -> None:
         )
 
 
-def _run_check(sf_dir: str, env_extra: dict) -> tuple[int, int]:
-    """Run the full-registry correctness gate; return (n_ok, n_fail)."""
+def _run_check(sf_dir: str, env_extra: dict) -> tuple[int, int, str]:
+    """Run the full-registry correctness gate; return (n_ok, n_fail) and
+    the session layout line it printed."""
     env = dict(os.environ, **env_extra)
     p = subprocess.run(
         [sys.executable, _CHECK, sf_dir],
@@ -113,7 +116,8 @@ def _run_check(sf_dir: str, env_extra: dict) -> tuple[int, int]:
             f"no count line in check output (rc={p.returncode}): "
             f"{(p.stderr or '')[-300:]}"
         )
-    return int(m.group(1)), int(m.group(2))
+    session = next((l for l in tail if l.startswith("session ")), "")
+    return int(m.group(1)), int(m.group(2)), session[len("session "):]
 
 
 def main() -> None:
@@ -142,16 +146,17 @@ def main() -> None:
         if spec.get("permute"):
             with tempfile.TemporaryDirectory(prefix="keh_perm_") as tmp:
                 _permuted_copy(sf_dir, tmp)
-                ok, fail = _run_check(tmp, spec["env"])
+                ok, fail, session = _run_check(tmp, spec["env"])
         else:
-            ok, fail = _run_check(sf_dir, spec["env"])
+            ok, fail, session = _run_check(sf_dir, spec["env"])
         results[name] = {
             "ok": ok,
             "fail": fail,
             "registry_n": registry_n,
+            "session": session,
             "wall_s": round(time.time() - t0, 1),
         }
-        print(f"{name}: {ok} ok, {fail} fail ({results[name]['wall_s']}s)")
+        print(f"{name}: {ok} ok, {fail} fail ({results[name]['wall_s']}s; {session})")
 
     artifact = {
         "sf_dir": os.path.basename(os.path.normpath(sf_dir)),

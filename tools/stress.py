@@ -373,7 +373,7 @@ def main():
         )
         sys.exit(2)
     n = int(args[0]) if args and args[0].isdigit() else 10
-    from pyspark.sql import SparkSession
+    from session import build_session
 
     # Shuffle partitions must scale with the data, exactly as a real
     # deployment sizes them: pinned at 64, the N=300 graph leg OOMed in
@@ -383,28 +383,25 @@ def main():
     # constant as N grows; AQE coalesces the excess at small N.
     shuffle_parts = max(64, 2 * n)
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("keh-stress")
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
-        .config("spark.sql.adaptive.enabled", "true")
-        # every _replicate output carries a 1x static size estimate
-        # (Generate doesn't scale sizeInBytes), so any IMPLICIT broadcast
-        # decision in this session is based on a deliberately false size;
-        # disable it (explicit F.broadcast hints in gate code still fire).
-        # A real Nx corpus has true scan stats and never hits this.
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark = build_session(
+        "keh-stress",
+        32,
         # single-JVM local mode: driver heap IS the cluster's total
         # memory.  24g covers N<=100; the N=300 graph leg additionally
         # needs the ~360M-edge memo artifact resident (heap OOM in
         # MemoryStore re-caching it from disk at 24g) — overridable so
         # extreme-N probes can use the machine's actual RAM.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("KEH_STRESS_DRIVER_MEM", "24g"),
-        )
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        driver_memory=os.environ.get("KEH_STRESS_DRIVER_MEM", "24g"),
+        conf={
+            "spark.sql.shuffle.partitions": str(shuffle_parts),
+            # every _replicate output carries a 1x static size estimate
+            # (Generate doesn't scale sizeInBytes), so any IMPLICIT
+            # broadcast decision in this session is based on a
+            # deliberately false size; disable it (explicit F.broadcast
+            # hints in gate code still fire).  A real Nx corpus has true
+            # scan stats and never hits this.
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     fams = _families(spark)
