@@ -57,7 +57,7 @@ def test_check_conf_rejects_a_malformed_entry(monkeypatch, bad):
 @pytest.mark.parametrize("script", ["check_correctness.py", "plan_lint.py"])
 def test_malformed_check_conf_fails_before_spark(script):
     proc = _tool(
-        script, "/root/testdata/sf0.001", "q1_pricing_summary",
+        script, "q1_pricing_summary",
         env_extra={"KEH_CHECK_CONF": "spark.sql.adaptive.enabled"},
     )
     assert proc.returncode != 0

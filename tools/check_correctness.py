@@ -299,7 +299,9 @@ def main():
         raise SystemExit(f"not a directory: {pathlike}")
     # KEH_CHECK_CONF ("k=v;k=v", parsed before Spark starts) perturbs the
     # session layout (spark.master, shuffle partitions) or strategy (AQE
-    # off, ...); results must be invariant to ALL of these perturbations
+    # off, ...).  Results must be invariant to all of them: one that moves
+    # with partition count (top-k ties, any_value, first-in-group) is
+    # nondeterministic at cluster scale even when it matches the oracle.
     overlay = check_conf()
 
     import __spark_entry__ as entrymod
